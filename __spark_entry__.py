@@ -4434,7 +4434,7 @@ def _q_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-LSH design table: S-curve capture probability plus
     FP/FN mass per (bands, rows) split of the 24-hash budget — the
-    tuning read behind dedup_minhash_pairs' 6x4 choice, as an operator
+    tuning read behind entity linking's 4x6 choice, as an operator
     (the dedup twin of join_advisor: measure, then choose the plan)."""
     return dedup.lsh_parameter_plan(spark, threshold=0.5)
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..pipeline.linking import bucket_pairs
 from .textstats import norm_col, norm_sql, tokens_col, tokens_sql
 
 SHINGLE = 5          # character-shingle width
@@ -174,38 +175,17 @@ banded AS (
 
 def _band_candidates(sig: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
     """(doc_a, doc_b) distinct LSH candidate pairs (same hash in any
-    band) from a ``minhash_signatures`` frame, hot buckets capped.
-    The skew guard is an aggregate + broadcast anti-join, not a window
-    count — the window itself would pile a hot bucket's rows onto one
-    reducer before the filter could drop them."""
-    bands_long = sig.select(
+    band) from a ``minhash_signatures`` frame, hot buckets capped — the
+    md5 ``band_i`` columns in the long shape of
+    ``pipeline.linking.bucket_pairs``."""
+    banded = sig.select(
         "doc_id",
         F.posexplode(F.array(*[F.col(f"band_{b}") for b in range(BANDS)])).alias(
-            "band_idx", "band_hash"
+            "band", "bucket"
         ),
     )
-    over_cap = (
-        bands_long.groupBy("band_idx", "band_hash")
-        .count()
-        .filter(F.col("count") > max_bucket)
-        .select("band_idx", "band_hash")
-    )
-    sized = bands_long.join(
-        F.broadcast(over_cap), ["band_idx", "band_hash"], "left_anti"
-    )
-    a = sized.alias("a")
-    b = sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
+    return bucket_pairs(banded, max_bucket).select(
+        F.col("m1").alias("doc_a"), F.col("m2").alias("doc_b")
     )
 
 

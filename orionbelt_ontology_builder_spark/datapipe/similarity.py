@@ -49,6 +49,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline.linking import bucket_pairs
 from .dedup import dot_expr
 
 NPROBE = 2       # query-side probes (topk)
@@ -1550,8 +1551,8 @@ def srp_lsh_pairs(
 
     Plan: signatures are pure codegen projections (hyperplane signs are
     Python-side constants — every engine sees identical literals);
-    candidates come from per-(table, bucket) self-joins with the
-    aggregate + broadcast-anti-join hot-bucket guard (never a window);
+    candidates come from the capped per-(table, bucket) self-join
+    ``pipeline.linking.bucket_pairs`` (tables are its bands);
     the exact cosine runs once per distinct candidate pair."""
     e = _with_norm(embeddings, dim)
     sig = embeddings.select(
@@ -1565,31 +1566,14 @@ def srp_lsh_pairs(
             for t in range(n_tables)
         ],
     )
-    long = sig.select(
+    banded = sig.select(
         "vec_id",
         F.posexplode(
             F.array(*[F.col(f"t{t}") for t in range(n_tables)])
-        ).alias("tbl", "bucket"),
+        ).alias("band", "bucket"),
     )
-    over = (
-        long.groupBy("tbl", "bucket")
-        .count()
-        .filter(F.col("count") > max_bucket)
-        .select("tbl", "bucket")
-    )
-    kept = long.join(F.broadcast(over), ["tbl", "bucket"], "left_anti")
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
-        )
-        .distinct()
+    cand = bucket_pairs(banded, max_bucket).select(
+        F.col("m1").alias("id_a"), F.col("m2").alias("id_b")
     )
     ea = e.select(
         F.col("vec_id").alias("id_a"),

@@ -12,11 +12,10 @@ Scale design:
   * signatures are computed per DISTINCT mention (dedup first — mention
     multiplicity at web scale is huge, signatures are per-string);
   * LSH bands turn the quadratic all-pairs problem into per-bucket
-    micro-joins; buckets bigger than ``max_bucket`` are dropped as
+    micro-joins; buckets bigger than ``MAX_BUCKET`` are dropped as
     hot keys (stop-surface-forms like "Company"), the explicit skew
-    guard the north_rule demands — dropped buckets are *counted* and
-    reported, never silently lost (they are still linkable via their
-    other bands);
+    guard the north_rule demands — a dropped bucket's members are
+    still linkable via their other bands;
   * verification is an exact Jaccard on shingle arrays, computed only
     for candidate pairs (LSH output), not all pairs.
 """
@@ -36,12 +35,20 @@ from pyspark.sql import functions as F
 #: family for the oracle-paired ops).
 SLICES = 2
 
+#: Linking constants, one source of truth for the full build and the
+#: incremental refresh (rationale: ``verified_same_as``).
+SHINGLE_N = 4
+BANDS = 4
+ROWS_PER_BAND = 6
+NUM_HASHES = BANDS * ROWS_PER_BAND
+MAX_BUCKET = 50
+
 
 def _h64(col, seed: int):
     return F.xxhash64(F.lit(seed), col)
 
 
-def shingles(col, n: int = 4):
+def shingles(col, n: int = SHINGLE_N):
     """Distinct character n-grams over the separator-normalized lowercase
     surface (native: sequence+transform).
 
@@ -59,7 +66,7 @@ def shingles(col, n: int = 4):
     )
 
 
-def minhash_signature(shingle_col, num_hashes: int = 24):
+def minhash_signature(shingle_col, num_hashes: int = NUM_HASHES):
     """ARRAY<BIGINT> of per-hash-function min over the shingle set: per
     seed one ``xxhash64`` transform, then independent mins of the high
     and low 32-bit words.  NB: every transform lambda takes ONE
@@ -88,12 +95,7 @@ def minhash_signature(shingle_col, num_hashes: int = 24):
     return F.array(*cols)
 
 
-def mention_signatures(
-    mentions: DataFrame,
-    col: str = "mention",
-    num_hashes: int = 24,
-    shingle_n: int = 4,
-) -> DataFrame:
+def mention_signatures(mentions: DataFrame) -> DataFrame:
     """distinct mention -> (mention, shingles, sig).
 
     The minhash itself is an explode + ONE whole-stage-codegen hash
@@ -116,66 +118,52 @@ def mention_signatures(
     # CodegenFallback transform chain) runs ONCE, wide; the agg branch
     # and the join-back both read the materialized co-partitioned rows.
     base = (
-        mentions.select(col)
+        mentions.select("mention")
         .distinct()
-        .repartition(par, col)
-        .withColumn("shingles", shingles(F.col(col), shingle_n))
+        .repartition(par, "mention")
+        .withColumn("shingles", shingles(F.col("mention")))
         # lazy: same lineage cut + compute-once, but materialization
         # rides the first consuming job instead of a dedicated one
         .localCheckpoint(eager=False)
     )
-    ex = base.select(col, F.explode("shingles").alias("_sh"))
+    ex = base.select("mention", F.explode("shingles").alias("_sh"))
     aggs = []
-    for seed in range(num_hashes // SLICES):
+    for seed in range(NUM_HASHES // SLICES):
         h = _h64(F.col("_sh"), seed)
         aggs.append(F.min(F.shiftrightunsigned(h, 32)).alias(f"_h{2 * seed}"))
         aggs.append(
             F.min(h.bitwiseAND(F.lit(4294967295))).alias(f"_h{2 * seed + 1}")
         )
-    sig = ex.groupBy(col).agg(*aggs).select(
-        col,
-        F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("sig"),
+    sig = ex.groupBy("mention").agg(*aggs).select(
+        "mention",
+        F.array(*[F.col(f"_h{i}") for i in range(NUM_HASHES)]).alias("sig"),
     )
-    return base.join(sig, col)
+    return base.join(sig, "mention")
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    col: str = "mention",
-    bands: int = 6,
-    rows_per_band: int = 4,
-    max_bucket: int = 50,
+def bucket_pairs(
+    banded: DataFrame, max_bucket: int, probe: DataFrame | None = None
 ) -> DataFrame:
-    """(m1, m2) candidate pairs sharing at least one LSH band bucket.
+    """Distinct (m1, m2), m1 < m2, of ids sharing a (band, bucket) — the
+    capped-bucket LSH self-join behind entity linking, MinHash dedup
+    and SRP cosine LSH.
 
-    Oversized buckets (> max_bucket) are hot keys — excluded from the
-    pairwise join (the quadratic blowup guard).
+    ``banded`` is the long ``(id, band, bucket)`` table with the id
+    column FIRST (its name is the caller's); the hash family that made
+    ``bucket`` stays with the caller.  Buckets with more than
+    ``max_bucket`` members are hot keys — excluded from the pairwise
+    join (the quadratic blowup guard).
 
-    6 bands x 4 rows (not 12x2): alias variants normalize to identical
-    shingle sets (J=1.0 -> every band matches regardless of r), while
-    4-row bands cut the J~0.2 false-candidate rate per band from J^2=4%%
-    to J^4=0.2%% — measured 6.1M -> ~0.4M candidate pairs at 300k
-    mentions, which is what the exact-Jaccard verify stage then pays
-    for."""
-    banded = sigs.select(
-        col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    ``probe`` (a frame holding the id column) restricts the output to
+    pairs with AT LEAST ONE side in it — the O(delta) refresh.  The cap
+    is still computed over the FULL banded table, so the probe path
+    excludes the same degenerate buckets the full self-join does, and
+    equals the full output restricted to probe-touching pairs.  Its
+    scale shape: the probe side is a left-semi prune of the capped
+    table (probe-sized), joined against the whole capped table on
+    (band, bucket) — only buckets containing a probe member produce
+    work."""
+    idc = banded.columns[0]
     # Skew guard via aggregate + broadcast anti-join, NOT a window count:
     # a window partitioned by (band, bucket) would shuffle every member
     # of a degenerate bucket onto one reducer before filtering — the
@@ -196,18 +184,23 @@ def lsh_candidate_pairs(
     # shuffled ONCE into the join partitioning and persisted; the
     # self-join reads both sides co-partitioned from cache with no
     # further exchange, and post-filter no partition exceeds
-    # max_bucket rows per (band, bucket) group.  6 x |distinct
-    # mentions| short rows — smaller than the candidate output it
-    # feeds, safe to cache at any scale (spills to disk past memory).
-    par = sigs.sparkSession.sparkContext.defaultParallelism
+    # max_bucket rows per (band, bucket) group.  bands x |distinct
+    # ids| short rows — smaller than the candidate output it feeds,
+    # safe to cache at any scale (spills to disk past memory).
+    par = banded.sparkSession.sparkContext.defaultParallelism
     small = (
         banded.join(F.broadcast(over_cap), ["band", "bucket"], "left_anti")
         .repartition(par, "band", "bucket")
         .persist()
     )
-    a = small.alias("a")
     b = small.alias("b")
-    par = sigs.sparkSession.sparkContext.defaultParallelism
+    x, y = F.col(f"a.{idc}"), F.col(f"b.{idc}")
+    if probe is None:
+        a = small.alias("a")
+        pair, m1, m2 = x < y, x, y
+    else:
+        a = small.join(probe.select(idc), idc, "left_semi").alias("a")
+        pair, m1, m2 = x != y, F.least(x, y), F.greatest(x, y)
     # dedup of multi-band collisions rides the m1 repartition the verify
     # join needs anyway: HashPartitioning(m1) satisfies the (m1, m2)
     # clustering requirement of dropDuplicates (same pair => same m1 =>
@@ -217,29 +210,60 @@ def lsh_candidate_pairs(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{col}") < F.col(f"b.{col}")),
+            & pair,
         )
-        .select(F.col(f"a.{col}").alias("m1"), F.col(f"b.{col}").alias("m2"))
+        .select(m1.alias("m1"), m2.alias("m2"))
         .repartition(par, "m1")
         .dropDuplicates(["m1", "m2"])
     )
 
 
+def lsh_candidate_pairs(
+    sigs: DataFrame, fresh: DataFrame | None = None
+) -> DataFrame:
+    """(m1, m2) candidate pairs sharing at least one LSH band bucket
+    (``BANDS`` x ``ROWS_PER_BAND`` xxhash64 banding, ``MAX_BUCKET``
+    cap) — see :func:`bucket_pairs`.
+
+    ``fresh`` (mentions new to an existing build) restricts the output
+    to pairs with at least one fresh side.  Full-rebuild equivalence:
+    candidate pairs over (old ∪ fresh) partition into pairs-both-old
+    (already discovered and folded into the existing canonical map by
+    the previous build) and pairs touching a fresh mention — exactly
+    the probe join.  ``sigs`` is the persisted signature store in
+    production (one Iceberg table keyed on mention; only fresh mentions
+    need new signatures)."""
+    banded = sigs.select(
+        "mention",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.xxhash64(
+                            *[
+                                F.element_at("sig", b * ROWS_PER_BAND + r + 1)
+                                for r in range(ROWS_PER_BAND)
+                            ]
+                        ).alias("bucket"),
+                    )
+                    for b in range(BANDS)
+                ]
+            )
+        ).alias("bb"),
+    ).select("mention", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    return bucket_pairs(banded, MAX_BUCKET, fresh)
+
+
 def verified_same_as(
     mentions: DataFrame,
-    col: str = "mention",
-    num_hashes: int = 24,
-    bands: int = 4,
-    rows_per_band: int = 6,
     jaccard_threshold: float = 0.9,
-    max_bucket: int = 50,
-    shingle_n: int = 4,
     numeric_suffix_guard: bool = True,
 ) -> DataFrame:
     """sameAs(m1, m2, jaccard) edges: LSH candidates verified by exact
     shingle Jaccard >= threshold plus a numeric-suffix agreement guard.
 
-    shingle_n=4 (not 3): with numeric id suffixes in surface forms,
+    SHINGLE_N=4 (not 3): with numeric id suffixes in surface forms,
     3-grams like "000" are shared by thousands of distinct entities,
     which both floods candidate generation (measured 2.5M candidate
     pairs for 60k mentions) and overflows the bucket cap, costing
@@ -274,26 +298,25 @@ def verified_same_as(
     0.64M with byte-identical verified output (true pairs sit at J=1.0
     and collide in every band under both shapes).  Verify stage
     measured 12.2s -> 5.7s at 300k mentions, local[16]."""
-    sigs = mention_signatures(mentions, col, num_hashes, shingle_n).localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs(sigs, col, bands, rows_per_band, max_bucket)
-    return verify_pairs(pairs, sigs, col, jaccard_threshold, numeric_suffix_guard)
+    sigs = mention_signatures(mentions).localCheckpoint(eager=False)
+    pairs = lsh_candidate_pairs(sigs)
+    return verify_pairs(pairs, sigs, jaccard_threshold, numeric_suffix_guard)
 
 
 def verify_pairs(
     pairs: DataFrame,
     sigs: DataFrame,
-    col: str = "mention",
     jaccard_threshold: float = 0.9,
     numeric_suffix_guard: bool = True,
 ) -> DataFrame:
     """Exact-Jaccard + suffix-guard verification of (m1, m2) candidate
     pairs against the signature table's shingle sets — the shared
     verify stage of :func:`verified_same_as` and the incremental
-    delta-linking path."""
-    sh = sigs.select(F.col(col), F.col("shingles"))
+    refresh."""
+    sh = sigs.select(F.col("mention"), F.col("shingles"))
     joined = (
-        pairs.join(sh.withColumnRenamed(col, "m1").withColumnRenamed("shingles", "sh1"), "m1")
-        .join(sh.withColumnRenamed(col, "m2").withColumnRenamed("shingles", "sh2"), "m2")
+        pairs.join(sh.withColumnRenamed("mention", "m1").withColumnRenamed("shingles", "sh1"), "m1")
+        .join(sh.withColumnRenamed("mention", "m2").withColumnRenamed("shingles", "sh2"), "m2")
         .withColumn("inter", F.size(F.array_intersect("sh1", "sh2")))
         .withColumn(
             "jaccard",
@@ -314,77 +337,3 @@ def verify_pairs(
 
         joined = joined.filter(sfx("m1") == sfx("m2"))
     return joined
-
-
-def lsh_candidate_pairs_delta(
-    sigs: DataFrame,
-    fresh: DataFrame,
-    col: str = "mention",
-    bands: int = 4,
-    rows_per_band: int = 6,
-    max_bucket: int = 50,
-) -> DataFrame:
-    """(m1, m2) candidate pairs with AT LEAST ONE side in ``fresh`` —
-    the O(delta) nightly-crawl variant of :func:`lsh_candidate_pairs`.
-
-    Full-rebuild equivalence: candidate pairs over (old ∪ fresh)
-    partition into pairs-both-old (already discovered and folded into
-    the existing canonical map by the previous build) and pairs
-    touching a fresh mention — exactly this join.  The bucket cap is
-    computed over the FULL banded table (old + fresh), so the delta
-    excludes the same degenerate buckets a full rebuild would.
-
-    Scale shape: the fresh side is a left-semi prune of the banded
-    table (delta-sized), joined against the capped full banded table
-    on (band, bucket) — only buckets containing a fresh member produce
-    work; everything old-only never leaves the scan.  ``sigs`` is the
-    persisted signature store in production (one Iceberg table keyed
-    on mention; only fresh mentions need new signatures)."""
-    banded = sigs.select(
-        col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    over_cap = (
-        banded.groupBy("band", "bucket")
-        .count()
-        .filter(F.col("count") > max_bucket)
-        .select("band", "bucket")
-    )
-    par = sigs.sparkSession.sparkContext.defaultParallelism
-    small = (
-        banded.join(F.broadcast(over_cap), ["band", "bucket"], "left_anti")
-        .repartition(par, "band", "bucket")
-        .persist()
-    )
-    small_fresh = small.join(fresh.select(col), col, "left_semi")
-    a = small_fresh.alias("a")
-    b = small.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{col}") != F.col(f"b.{col}")),
-        )
-        .select(
-            F.least(F.col(f"a.{col}"), F.col(f"b.{col}")).alias("m1"),
-            F.greatest(F.col(f"a.{col}"), F.col(f"b.{col}")).alias("m2"),
-        )
-        .repartition(par, "m1")
-        .dropDuplicates(["m1", "m2"])
-    )

@@ -103,7 +103,8 @@ def incremental_update(
     Law (tested): the applied result equals a full rebuild over
     (old ∪ new) pages row-for-row — candidate pairs over the union
     partition into pairs-both-old (already folded into ``map_old``) and
-    pairs touching a fresh mention (``lsh_candidate_pairs_delta``);
+    pairs touching a fresh mention (``lsh_candidate_pairs`` with the
+    fresh mentions as its probe set);
     ``incremental_components`` reproduces the full CC labels from the
     old map's spanning forest + delta edges; and only edges whose
     surface's canonical assignment CHANGED need re-rewriting (an
@@ -116,11 +117,7 @@ def incremental_update(
     and the updated ``canonical_map`` / accumulated ``raw_triples``.
     On a cluster, ``raw_old`` / ``map_old`` / the signature store are
     Iceberg tables; only fresh mentions need new signatures."""
-    from .linking import (
-        lsh_candidate_pairs_delta,
-        mention_signatures,
-        verify_pairs,
-    )
+    from .linking import lsh_candidate_pairs, mention_signatures, verify_pairs
     from ..operators.fixpoint import incremental_components
 
     raw_new = extract_raw_triples(
@@ -140,7 +137,7 @@ def incremental_update(
     all_m = m_old.unionByName(m_new).distinct()
 
     sigs = mention_signatures(all_m).localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs_delta(sigs, fresh)
+    pairs = lsh_candidate_pairs(sigs, fresh)
     delta = verify_pairs(
         pairs, sigs, jaccard_threshold=jaccard_threshold
     ).persist()

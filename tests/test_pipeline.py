@@ -442,33 +442,48 @@ def test_incremental_update_delta_contract(spark):
     assert _edge_rows(applied) == _edge_rows(inc["edges"])
 
 
-def test_lsh_candidate_pairs_delta_law(spark):
-    """delta pairs == full self-join pairs restricted to >=1 fresh side
-    (same banding, same bucket cap computed over the FULL table)."""
+@pytest.mark.parametrize("split", ["md5_split", "all_fresh"])
+def test_lsh_candidate_pairs_delta_law(spark, split):
+    """probe pairs == full self-join pairs restricted to >=1 fresh side
+    (one set of banding constants, bucket cap computed over the FULL
+    table).  ``all_fresh`` makes every mention a probe, so the probe
+    path must equal the full path: banding that drifts between the
+    two fails it."""
     from orionbelt_ontology_builder_spark.pipeline.linking import (
         lsh_candidate_pairs,
-        lsh_candidate_pairs_delta,
         mention_signatures,
     )
 
     pages = P.synthesize_pages(spark, 300).cache()
     kg_raw = R.build_kg(pages)["raw_triples"]
+    # prefix-related stems sit at J~0.7, the false-candidate mode the
+    # banding shape is chosen against: 6x4 and 4x6 banding give
+    # different candidate sets on them (the KG surfaces alone do not)
+    stems = spark.createDataFrame(
+        [
+            (f"Northwind Logistics {s}{i}",)
+            for s in ("Meta", "Metro", "Metric", "Meter", "Metal", "Method")
+            for i in range(3)
+        ],
+        "mention string",
+    )
     mentions = (
         kg_raw.select(F.col("subj_surface").alias("mention"))
         .unionByName(kg_raw.select(F.col("obj_surface").alias("mention")))
+        .unionByName(stems)
         .distinct()
     )
-    fresh = mentions.filter(F.md5("mention").substr(1, 1) < "4")
+    if split == "md5_split":
+        fresh = mentions.filter(F.md5("mention").substr(1, 1) < "4")
+    else:
+        fresh = mentions
     sigs = mention_signatures(mentions).localCheckpoint(eager=False)
-    full = {
-        (r["m1"], r["m2"])
-        for r in lsh_candidate_pairs(sigs, bands=4, rows_per_band=6).collect()
-    }
+    full = {(r["m1"], r["m2"]) for r in lsh_candidate_pairs(sigs).collect()}
     fresh_set = {r["mention"] for r in fresh.collect()}
     want = {p for p in full if p[0] in fresh_set or p[1] in fresh_set}
     got = {
         (r["m1"], r["m2"])
-        for r in lsh_candidate_pairs_delta(sigs, fresh).collect()
+        for r in lsh_candidate_pairs(sigs, fresh).collect()
     }
     assert got == want
-    assert want  # the split actually exercises the delta path
+    assert want  # the split actually exercises the probe path

@@ -195,35 +195,58 @@ def test_ivf_topk_with_kmeans_centroids_matches_brute(embs):
 # ------------------------------------------------------------------ #
 
 
-def test_linking_candidates_plan_window_free(spark):
-    """The LSH bucket-cap guard must be the aggregate + broadcast
-    anti-join shape: a Window count partitioned by (band, bucket) would
-    buffer every row of a degenerate bucket in one partition's memory
-    before filtering (the OOM/straggler the cap exists to prevent)."""
-    from pyspark.sql import Row
-
+def _linking_candidates(request):
     from orionbelt_ontology_builder_spark.pipeline import linking as L
 
+    spark = request.getfixturevalue("spark")
     mentions = spark.createDataFrame(
         [Row(mention=f"entity alpha {i}") for i in range(30)]
         + [Row(mention="entity alpha 7 ")]  # one near-dup alias
     )
-    sigs = L.mention_signatures(mentions)
-    pairs = L.lsh_candidate_pairs(sigs)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    return L.lsh_candidate_pairs(L.mention_signatures(mentions))
+
+
+def _dedup_pairs(request):
+    return dedup.minhash_band_pairs(request.getfixturevalue("docs"))
+
+
+def _srp_pairs(request):
+    return similarity.srp_lsh_pairs(
+        request.getfixturevalue("embs"), dim=8, n_bits=4, n_tables=2
+    )
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_linking_candidates, _dedup_pairs, _srp_pairs],
+    ids=["linking", "dedup_minhash", "srp"],
+)
+def test_linking_candidates_plan_window_free(request, build):
+    """Every caller of the capped-bucket LSH self-join
+    (``linking.bucket_pairs``) keeps its shape.  The bucket-cap guard
+    must be the aggregate + broadcast anti-join: a Window count
+    partitioned by (band, bucket) would buffer every row of a
+    degenerate bucket in one partition's memory before filtering (the
+    OOM/straggler the cap exists to prevent).  No corpus x corpus
+    cartesian stage either."""
+    import re
+
+    plan = _plan(build(request))
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the guard's anti-join is present
     assert "LeftAnti" in plan
-    # multi-band dedup rides the m1 repartition: no exchange keyed on
-    # (m1, m2) anywhere (the old distinct-then-repartition double
-    # shuffle); HashPartitioning(m1) satisfies the dedup's clustering
-    import re
-
-    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    assert exchanges, plan
-    assert not any("m2" in e for e in exchanges), exchanges
+    # multi-band dedup rides the m1 repartition: an exchange keyed on m1
+    # alone, none keyed on the pair's second column m2 (the old
+    # distinct-then-repartition double shuffle); HashPartitioning(m1)
+    # satisfies the dedup's clustering
+    keys = [
+        re.sub(r"#\d+L?", "", e).split(", ")[:-1]
+        for e in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    ]
+    assert ["m1"] in keys, keys
+    assert not any("m2" in k for k in keys), keys
 
 
 def test_signature_plan_codegen_agg(spark):
@@ -868,14 +891,6 @@ def test_char_trigram_lm_broadcasts_model_tables(docs):
     plan = _plan(TS.char_trigram_logprob(docs))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-
-
-def test_srp_pairs_plan_bucketed_no_cartesian(embs):
-    import orionbelt_ontology_builder_spark.datapipe.similarity as S
-
-    plan = _plan(S.srp_lsh_pairs(embs, dim=8, n_bits=4, n_tables=2))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_pq_adc_plan_broadcasts_lut(embs):
