@@ -85,8 +85,7 @@ def main() -> None:
     wkg = R.build_kg(warm)
     wkg["edges"].count()
     wkg["class_hierarchy"].count()
-    for _d in (wkg["raw_triples"], wkg["same_as"]):
-        _d.unpersist()
+    wkg["raw_triples"].unpersist()
 
     def kg_leg():
         kg = R.build_kg(pages)

@@ -49,13 +49,6 @@ def _sign_sql(rel: str, i: int) -> str:
     )
 
 
-def _sign_sql_duck(rel: str, i: int) -> str:
-    return (
-        f"(1 - 2 * (('0x' || substr(md5({rel}::VARCHAR || '|' || '{i}'),"
-        f" 1, 2))::INT % 2))"
-    )
-
-
 def distmult_rank(
     embeddings: DataFrame, n_queries: int = 8, dim: int = 64
 ) -> DataFrame:

@@ -365,16 +365,6 @@ def uri(name: str, base: str) -> str:
     return base + name
 
 
-def local_name(u: str) -> str:
-    """Strip URI at last ``#`` else last ``/``
-    (reference ``ontology_manager.py:294-299``)."""
-    if "#" in u:
-        return u.rsplit("#", 1)[1]
-    if "/" in u:
-        return u.rsplit("/", 1)[1]
-    return u
-
-
 def t_uri(s: str, p: str, o: str) -> tuple:
     return (s, p, o, "uri", None, None)
 

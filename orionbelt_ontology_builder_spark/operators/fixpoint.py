@@ -86,12 +86,21 @@ def connected_components(
     symmetrized table needs no dedup/self-loop shuffle + checkpoint.
     """
     # symmetrize; parent[v] initialized to min(neighbor ∪ self).
-    # ``both`` is checkpointed FIRST so the input lineage (often an
-    # expensive LSH-verify pipeline) executes exactly once.
-    # sym is re-joined EVERY round, hence its own checkpoint.
+    # ``both`` emits each input row in both directions from ONE scan
+    # (explode, not a union of two projections — a union reads its
+    # input once per branch) and is checkpointed FIRST, so the input
+    # lineage (often an expensive LSH-verify pipeline) executes exactly
+    # once.  sym is re-joined EVERY round, hence its own checkpoint.
     both = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                    F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+                )
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .localCheckpoint(eager=True)
     )
     if assume_clean_pairs:

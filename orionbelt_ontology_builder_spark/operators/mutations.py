@@ -736,17 +736,6 @@ def rename_checked(
 UNSET = object()
 
 
-def ontology_uri_of(triples: DataFrame) -> str | None:
-    """First (min) subject typed owl:Ontology — deterministic stand-in
-    for the reference's single stored ``ontology_uri``."""
-    row = (
-        type_slice(triples, OWL.Ontology)
-        .agg(F.min("subj").alias("u"))
-        .collect()[0]
-    )
-    return row["u"]
-
-
 def set_ontology_metadata(
     triples: DataFrame,
     ontology_uri: str,

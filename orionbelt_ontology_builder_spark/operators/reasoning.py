@@ -541,22 +541,6 @@ def sameas_components(triples: DataFrame) -> DataFrame:
     return connected_components(edges)
 
 
-def sameas_closure(triples: DataFrame, include_self: bool = False) -> DataFrame:
-    """Symmetric-transitive closure of sameAs, computed FROM the
-    component map: within each clique, pairs come from a per-component
-    self-join (each component an independent partition — the same
-    bucketed shape as LSH verify), not a global iterated self-join.
-
-    NB: the closure's OUTPUT is inherently quadratic in clique size
-    (that is owlrl's materialization semantics); at web scale you keep
-    the component map and skip materialization — the canonical-
-    representative rewrite (``pipeline.canonicalize``) is that path.
-    """
-    return closure_from_components(
-        sameas_components(triples), include_self=include_self
-    )
-
-
 def closure_from_components(cc: DataFrame, include_self: bool = False) -> DataFrame:
     """sameAs closure pairs from an already-computed (node, component)
     map — lets ``apply_reasoning`` share ONE CC pass between the closure

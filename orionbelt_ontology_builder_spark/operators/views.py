@@ -59,10 +59,6 @@ def _has_type(type_uri: str) -> Column:
     ).isNotNull()
 
 
-def subjects_of_type(triples: DataFrame, type_uri: str) -> DataFrame:
-    return type_slice(triples, type_uri)
-
-
 # --------------------------------------------------------------------------
 # classes (reference ontology_manager.py:487-528)
 # --------------------------------------------------------------------------

@@ -47,18 +47,13 @@ def with_extracted_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn("extracted_text", html_to_text_udf(F.col("html")))
 
 
-def extract_raw_triples(pages: DataFrame, use_text_column: bool = False) -> DataFrame:
-    """One row per pattern-matched sentence across all pages.
-
-    ``use_text_column=True`` trusts the pages table's pre-extracted
-    ``text`` (Common-Crawl WET-style); otherwise extraction runs from the
-    raw ``html`` bytes.
-    """
+def extract_raw_triples(pages: DataFrame) -> DataFrame:
+    """One row per pattern-matched sentence across all pages, extracted
+    from the raw ``html`` bytes."""
     from ..session import ship_package
 
     ship_package(pages.sparkSession)
-    cols = ["url", "warc_ts", "text" if use_text_column else "html"]
-    src = pages.select(*cols)
+    src = pages.select("url", "warc_ts", "html")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -66,11 +61,7 @@ def extract_raw_triples(pages: DataFrame, use_text_column: bool = False) -> Data
                 "subj_surface": [], "pred": [], "obj_surface": [],
                 "source_url": [], "warc_ts": [],
             }
-            texts = (
-                pdf["text"]
-                if use_text_column
-                else pdf["html"].map(html_to_text)
-            )
+            texts = pdf["html"].map(html_to_text)
             for url, ts, text in zip(pdf["url"], pdf["warc_ts"], texts):
                 for s, p, o in extract_triples_from_text(text or ""):
                     rows["subj_surface"].append(s)
@@ -81,15 +72,3 @@ def extract_raw_triples(pages: DataFrame, use_text_column: bool = False) -> Data
             yield pd.DataFrame(rows)
 
     return src.mapInPandas(gen, RAW_TRIPLES_SCHEMA)
-
-
-def extraction_metrics(pages: DataFrame, raw_triples: DataFrame) -> DataFrame:
-    """Per-partition-free metrics row: pages seen, triples extracted,
-    distinct mentions — the north_rule's 'extraction metrics'."""
-    n_pages = pages.count()
-    agg = raw_triples.agg(
-        F.count("*").alias("triples_extracted"),
-        F.count_distinct("subj_surface").alias("distinct_subjects"),
-        F.count_distinct("source_url").alias("pages_with_triples"),
-    )
-    return agg.withColumn("pages_total", F.lit(n_pages))

@@ -72,15 +72,10 @@ def with_partitioning(
     )
 
 
-def write_edges(
-    edges: DataFrame, out_dir: str, n_buckets: int = 64, salt_n: int = 8,
-    hot_threshold: int = 100000, hot_sample_fraction: float | None = None,
-) -> None:
+def write_edges(edges: DataFrame, out_dir: str) -> None:
     """Write the edge table partitioned by subject-hash bucket (+salt)."""
     (
-        with_partitioning(
-            edges, n_buckets, salt_n, hot_threshold, hot_sample_fraction
-        )
+        with_partitioning(edges)
         .repartition("bucket", "salt")
         .write.mode("overwrite")
         .partitionBy("bucket", "salt")
@@ -88,17 +83,14 @@ def write_edges(
     )
 
 
-def write_class_hierarchy(edges: DataFrame, out_dir: str) -> None:
-    """Distinct (child, parent) pairs from subClassOf edges."""
+def write_class_hierarchy(hierarchy: DataFrame, out_dir: str) -> None:
+    """Write the (child, parent) class pairs (``run.class_hierarchy``)."""
     (
-        edges.filter(F.col("pred") == "subClassOf")
-        .select(F.col("subj").alias("child"), F.col("obj").alias("parent"))
-        .distinct()
         # schema-level table: distinct (child, parent) class pairs number in
         # the thousands even for a trillion-document corpus, so one output
         # file is correct — the coalesce runs AFTER the distinct's shuffle
         # and therefore doesn't narrow the aggregation's parallelism
-        .coalesce(1)
+        hierarchy.coalesce(1)
         .write.mode("overwrite")
         .parquet(os.path.join(out_dir, "class_hierarchy"))
     )

@@ -7,8 +7,10 @@
                                                              class_hierarchy
 
 Every stage is a DataFrame transform; the only Python is Arrow-batched
-extraction.  ``build_kg`` is pure (returns DataFrames); ``run_pipeline``
-adds partitioned writes + checkpoint manifest.
+extraction.  The chain from raw triples to edges is written once
+(``_link``): ``build_kg`` runs it over persisted in-memory extraction
+and returns DataFrames; ``run_pipeline`` runs it over the checkpointed
+per-slice extraction and adds the partitioned writes.
 """
 
 from __future__ import annotations
@@ -21,79 +23,65 @@ from .extract import extract_raw_triples
 from .linking import verified_same_as
 
 
-def build_kg(
-    pages: DataFrame,
-    jaccard_threshold: float = 0.9,
-    use_text_column: bool = False,
-) -> dict[str, DataFrame]:
-    # raw feeds two consumers (mention extraction + final edge rewrite):
-    # persist so the Arrow extraction stage runs once, not per-branch
-    raw = extract_raw_triples(pages, use_text_column=use_text_column).persist()
-    # linking operates on distinct surface forms (small next to the edge
-    # set); exclude none — class names link to themselves only
-    mentions = (
+def surface_mentions(raw: DataFrame) -> DataFrame:
+    """Distinct subject/object surface forms of raw triples — linking
+    operates on these (small next to the edge set); class names are
+    kept and link to themselves only."""
+    return (
         raw.select(F.col("subj_surface").alias("mention"))
         .unionByName(raw.select(F.col("obj_surface").alias("mention")))
         .distinct()
     )
-    # persist: canonical_map consumes same_as twice (edge symmetrization
-    # + node set) before checkpointing — without this the LSH-verify
-    # lineage executes twice
-    same_as = verified_same_as(
-        mentions, jaccard_threshold=jaccard_threshold
-    ).persist()
+
+
+def class_hierarchy(edges: DataFrame) -> DataFrame:
+    """Distinct (child, parent) pairs of the subClassOf edges."""
+    return (
+        edges.filter(F.col("pred") == "subClassOf")
+        .select(F.col("subj").alias("child"), F.col("obj").alias("parent"))
+        .distinct()
+    )
+
+
+def _link(raw: DataFrame) -> dict[str, DataFrame]:
+    """raw triples -> verified sameAs -> canonical map -> rewritten
+    edges.  ``raw`` feeds two consumers (mentions + rewrite); callers
+    hand in a persisted or parquet-backed frame so extraction does not
+    rerun per branch."""
+    mentions = surface_mentions(raw)
+    same_as = verified_same_as(mentions)
     mapping = canonical_map(same_as)
     edges = rewrite_edges(raw, mapping)
     return {
-        "raw_triples": raw,  # persisted above; shared by mentions + rewrite
+        "raw_triples": raw,
         "mentions": mentions,
         "same_as": same_as,
         "canonical_map": mapping,
         "edges": edges,
-        "class_hierarchy": (
-            edges.filter(F.col("pred") == "subClassOf")
-            .select(F.col("subj").alias("child"), F.col("obj").alias("parent"))
-            .distinct()
-        ),
+        "class_hierarchy": class_hierarchy(edges),
     }
 
 
+def build_kg(pages: DataFrame) -> dict[str, DataFrame]:
+    return _link(extract_raw_triples(pages).persist())
+
+
 def run_pipeline(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    n_slices: int = 8,
-    jaccard_threshold: float = 0.9,
+    spark: SparkSession, pages: DataFrame, out_dir: str, n_slices: int = 8
 ) -> dict[str, DataFrame]:
     """Checkpointed variant: extraction runs per-slice with manifest
-    resume, then linking/canonicalization over the accumulated raw
+    resume, then the ``build_kg`` chain over the accumulated raw
     triples, then partitioned writes."""
-    from .materialize import (
-        run_extraction_with_checkpoints,
-        write_class_hierarchy,
-        write_edges,
-    )
+    from . import materialize as M
 
-    raw = run_extraction_with_checkpoints(spark, pages, out_dir, n_slices)
-    mentions = (
-        raw.select(F.col("subj_surface").alias("mention"))
-        .unionByName(raw.select(F.col("obj_surface").alias("mention")))
-        .distinct()
-    )
-    same_as = verified_same_as(mentions, jaccard_threshold=jaccard_threshold)
-    mapping = canonical_map(same_as)
-    edges = rewrite_edges(raw, mapping)
-    write_edges(edges, out_dir)
-    write_class_hierarchy(edges, out_dir)
-    return {"edges": edges, "canonical_map": mapping, "same_as": same_as}
+    kg = _link(M.run_extraction_with_checkpoints(spark, pages, out_dir, n_slices))
+    M.write_edges(kg["edges"], out_dir)
+    M.write_class_hierarchy(kg["class_hierarchy"], out_dir)
+    return kg
 
 
 def incremental_update(
-    raw_old: DataFrame,
-    map_old: DataFrame,
-    pages_new: DataFrame,
-    jaccard_threshold: float = 0.9,
-    use_text_column: bool = False,
+    raw_old: DataFrame, map_old: DataFrame, pages_new: DataFrame
 ) -> dict[str, DataFrame]:
     """O(delta) nightly-crawl refresh: fold a NEW batch of pages into an
     existing build without re-linking the whole corpus (north_rule:
@@ -103,7 +91,7 @@ def incremental_update(
     Law (tested): the applied result equals a full rebuild over
     (old ∪ new) pages row-for-row — candidate pairs over the union
     partition into pairs-both-old (already folded into ``map_old``) and
-    pairs touching a fresh mention (``lsh_candidate_pairs`` with the
+    pairs touching a fresh mention (``verified_same_as`` with the
     fresh mentions as its probe set);
     ``incremental_components`` reproduces the full CC labels from the
     old map's spanning forest + delta edges; and only edges whose
@@ -115,32 +103,17 @@ def incremental_update(
     ``raw_affected_old`` (whose previously-materialized edges must be
     retired), plus the applied views ``edges`` / ``class_hierarchy``
     and the updated ``canonical_map`` / accumulated ``raw_triples``.
-    On a cluster, ``raw_old`` / ``map_old`` / the signature store are
-    Iceberg tables; only fresh mentions need new signatures."""
-    from .linking import lsh_candidate_pairs, mention_signatures, verify_pairs
+    Signatures are still computed for ALL mentions (old and new); only
+    the candidate join and the verify are delta-sized.  On a cluster,
+    ``raw_old`` / ``map_old`` are Iceberg tables."""
     from ..operators.fixpoint import incremental_components
 
-    raw_new = extract_raw_triples(
-        pages_new, use_text_column=use_text_column
-    ).persist()
-
-    def surfaces(raw):
-        return (
-            raw.select(F.col("subj_surface").alias("mention"))
-            .unionByName(raw.select(F.col("obj_surface").alias("mention")))
-            .distinct()
-        )
-
-    m_old = surfaces(raw_old)
-    m_new = surfaces(raw_new)
+    raw_new = extract_raw_triples(pages_new).persist()
+    m_old = surface_mentions(raw_old)
+    m_new = surface_mentions(raw_new)
     fresh = m_new.join(m_old, "mention", "left_anti")
     all_m = m_old.unionByName(m_new).distinct()
-
-    sigs = mention_signatures(all_m).localCheckpoint(eager=False)
-    pairs = lsh_candidate_pairs(sigs, fresh)
-    delta = verify_pairs(
-        pairs, sigs, jaccard_threshold=jaccard_threshold
-    ).persist()
+    delta = verified_same_as(all_m, fresh).persist()
 
     cc_old = map_old.select(
         F.col("mention").alias("node"), F.col("canonical").alias("component")
@@ -196,11 +169,7 @@ def incremental_update(
         "raw_affected_old": affected_old,
         "edges_delta": edges_delta,
         "edges": edges,
-        "class_hierarchy": (
-            edges.filter(F.col("pred") == "subClassOf")
-            .select(F.col("subj").alias("child"), F.col("obj").alias("parent"))
-            .distinct()
-        ),
+        "class_hierarchy": class_hierarchy(edges),
     }
 
 

@@ -142,11 +142,3 @@ def _split_sentences(line: str) -> list[str]:
         parts.append(chunk)
     return parts
 
-
-def extract_mentions_from_text(text: str) -> list[str]:
-    """All entity surface forms participating in matched relations."""
-    ments = []
-    for s, _p, o in extract_triples_from_text(text):
-        ments.append(s)
-        ments.append(o)
-    return ments

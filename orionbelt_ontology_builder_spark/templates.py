@@ -239,11 +239,6 @@ UPPER_ONTOLOGIES: list[dict] = [
 ]
 
 
-def get_upper_ontology_names() -> list[str]:
-    """Reference ``templates.py:385-387``."""
-    return [o["name"] for o in UPPER_ONTOLOGIES]
-
-
 def get_upper_ontology(name: str) -> dict | None:
     """Reference ``templates.py:390-395``."""
     for o in UPPER_ONTOLOGIES:

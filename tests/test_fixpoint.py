@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from orionbelt_ontology_builder_spark.fixtures import BASE
 from orionbelt_ontology_builder_spark.model import SKOS, TRIPLES_SCHEMA, t_uri
 from orionbelt_ontology_builder_spark.operators import fixpoint
@@ -129,6 +131,36 @@ def test_connected_components_random_vs_union_find(spark):
         touched2 = sorted({u for e in clean for u in e})
         want2 = _uf_components(clean, touched2)
         assert got2 == want2, (trial, clean)
+
+
+@pytest.mark.parametrize("clean", [False, True], ids=["general", "clean_pairs"])
+def test_connected_components_evaluates_input_once(spark, clean):
+    """The input lineage (in the KG build: the whole LSH-verify chain)
+    runs once per input row, not once per symmetrized direction —
+    counted by an accumulator inside a UDF that produces ``src``."""
+    from pyspark.sql import functions as F
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(i):
+        acc.add(1)
+        return f"n{i:04d}"
+
+    n = 200
+    edges = spark.range(n).select(
+        counted(2 * F.col("id")).alias("src"),
+        F.format_string("n%04d", 2 * F.col("id") + 1).alias("dst"),
+    )
+    comp = {
+        r["node"]: r["component"]
+        for r in fixpoint.connected_components(
+            edges, assume_clean_pairs=clean
+        ).collect()
+    }
+    assert acc.value == n
+    assert len(comp) == 2 * n
+    assert all(comp[f"n{2 * i + 1:04d}"] == f"n{2 * i:04d}" for i in range(n))
 
 
 def test_incremental_components_law_random(spark):

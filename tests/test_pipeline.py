@@ -132,8 +132,10 @@ def test_class_hierarchy_output(spark, pages_df):
 
 
 def test_checkpoint_resume(spark, pages_df, tmp_path):
+    """run_pipeline resumes from its manifest, and its written outputs
+    equal build_kg's (one chain behind both entry points)."""
     out = str(tmp_path / "kg_out")
-    res = R.run_pipeline(spark, pages_df, out, n_slices=4)
+    R.run_pipeline(spark, pages_df, out, n_slices=4)
     manifest = os.path.join(out, "_manifest.jsonl")
     with open(manifest) as fh:
         entries = [json.loads(l) for l in fh]
@@ -151,6 +153,14 @@ def test_checkpoint_resume(spark, pages_df, tmp_path):
     edges = spark.read.parquet(edges_dir)
     assert {"subj", "pred", "obj", "source_url", "warc_ts", "bucket", "salt"} <= set(edges.columns)
     assert edges.count() > 0
+    kg = R.build_kg(pages_df)
+    cols = ["subj", "pred", "obj", "source_url", "warc_ts"]
+    rows = lambda df, cs: sorted(tuple(r) for r in df.select(*cs).collect())
+    assert rows(edges, cols) == rows(kg["edges"], cols)
+    hier = spark.read.parquet(os.path.join(out, "class_hierarchy"))
+    assert rows(hier, ["child", "parent"]) == rows(
+        kg["class_hierarchy"], ["child", "parent"]
+    )
 
 
 def test_lineage_carried(spark, pages_df):
@@ -307,7 +317,7 @@ def test_numeric_suffix_guard_blocks_containment_merges(spark):
         ],
         "mention string",
     )
-    pairs = L.verified_same_as(mentions, jaccard_threshold=0.9).collect()
+    pairs = L.verified_same_as(mentions).collect()
     sfx = lambda m: m.replace(" ", "").replace("-", "")[-6:]
     cross = [r for r in pairs if sfx(r["m1"]) != sfx(r["m2"])]
     assert cross == [], f"containment pairs leaked: {cross}"
@@ -320,9 +330,7 @@ def test_numeric_suffix_guard_blocks_containment_merges(spark):
         for a, b in itertools.combinations(forms, 2):
             assert (a, b) in linked or (b, a) in linked, (a, b)
     # guard off reproduces the trap (documents WHY the guard exists)
-    raw = L.verified_same_as(
-        mentions, jaccard_threshold=0.9, numeric_suffix_guard=False
-    ).collect()
+    raw = L.verified_same_as(mentions, numeric_suffix_guard=False).collect()
     assert any(sfx(r["m1"]) != sfx(r["m2"]) for r in raw)
 
 
