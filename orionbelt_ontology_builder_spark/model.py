@@ -318,12 +318,10 @@ def local_df(spark, rows, schema, rows_per_slice: int = 50_000):
     definition small (fixtures, parsed ontology documents, axiom
     payloads); bulk paths read parquet/NT and never come through
     here."""
-    import os
-
     rows = list(rows)
-    floor = int(os.environ.get("ORIONBELT_LOCAL_SLICES", "4"))
+    # a floor of 4 slices: one slice serializes iterative legs' narrow stages
     n = max(
-        min(floor, spark.sparkContext.defaultParallelism),
+        min(4, spark.sparkContext.defaultParallelism),
         min(
             len(rows) // rows_per_slice + 1,
             spark.sparkContext.defaultParallelism,

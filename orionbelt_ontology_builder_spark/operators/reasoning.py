@@ -33,6 +33,13 @@ prp-eqp1/2, eq-rep-s/p/o substitution, and
   cls-hv1 (r onProperty p), (r hasValue v), (x type r) -> (x p v)
   cls-hv2 (r onProperty p), (r hasValue v), (x p v)    -> (x type r)
 
+Every join rule above is declared once, in the rule table ``_RULES``:
+the schema gate(s) it joins against, whether it is owl-rl only, and its
+builder (one of a few join shapes).  ``_schema_probe`` derives its gate
+aggregation from that table and ``_round`` applies each rule whose
+gates are non-empty.  The sameAs rules (eq-sym/eq-trans, eq-rep-*) and
+property chains (prp-spo2) run between rounds in ``apply_reasoning``.
+
 Scale notes: schema-level slices (subClassOf, subPropertyOf, domain,
 range, property-characteristic sets) are tiny next to the instance data —
 every rule join broadcasts the schema side, so one reasoning round over
@@ -40,6 +47,9 @@ N instance triples is a handful of broadcast joins + one distinct.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,419 +69,314 @@ def _as_triples(df: DataFrame, kind: str = "uri") -> DataFrame:
     )
 
 
-def _schema_flags(triples: DataFrame) -> dict:
-    """Which schema constructs exist — see ``_schema_probe``."""
-    return _schema_probe(triples)[1]
+# --------------------------------------------------------------------------
+# rule table
+# --------------------------------------------------------------------------
+#
+# A gate names the schema slice a rule joins against: ``(pred, None)`` is
+# the triples with that predicate, ``(rdf:type, X)`` the resources typed
+# X.  A builder takes the round's views (``_round``) and one slice per
+# gate, projected to a = subject, b = object (+ b's term kind, language
+# and datatype), and returns candidate triples.
+
+
+def _gate_cond(gate: tuple):
+    pred, obj = gate
+    cond = F.col("pred") == pred
+    return cond if obj is None else cond & (F.col("obj") == obj)
+
+
+def _slice(triples: DataFrame, gate: tuple) -> DataFrame:
+    return triples.filter(_gate_cond(gate)).select(
+        F.col("subj").alias("a"),
+        F.col("obj").alias("b"),
+        F.col("obj_kind").alias("b_kind"),
+        F.col("obj_lang").alias("b_lang"),
+        F.col("obj_dt").alias("b_dt"),
+    )
+
+
+def _on_pred(src: DataFrame, s: DataFrame, key: str = "a") -> DataFrame:
+    """``src`` rows whose predicate is in the slice's ``key`` column."""
+    return src.join(F.broadcast(s), src["pred"] == s[key])
+
+
+def _chain(pred: str):
+    """rdfs5 / rdfs11: (x pred y), (y pred z) -> (x pred z)."""
+
+    def build(v, s):
+        return _as_triples(
+            s.alias("x")
+            .join(F.broadcast(s.alias("y")), F.col("x.b") == F.col("y.a"))
+            .select(
+                F.col("x.a").alias("subj"),
+                F.lit(pred).alias("pred"),
+                F.col("y.b").alias("obj"),
+            )
+        )
+
+    return build
+
+
+def _retype(v, s):
+    """rdfs9 / cax-eqc: (x type a), (a, b) in slice -> (x type b)."""
+    return _as_triples(
+        v.types.join(F.broadcast(s), v.types["c"] == s["a"]).select(
+            F.col("x").alias("subj"),
+            F.lit(RDF.type).alias("pred"),
+            F.col("b").alias("obj"),
+        )
+    )
+
+
+def _repred(v, s):
+    """rdfs7 / prp-eqp: (x a y), (a, b) in slice -> (x b y), keeping the
+    object's term kind."""
+    return _on_pred(v.assertions, s).select(
+        "subj", F.col("b").alias("pred"), "obj", "obj_kind", "obj_lang", "obj_dt"
+    )
+
+
+def _typing(end: str):
+    """rdfs2 (``end="subj"``) / rdfs3 (``end="obj"``, URI objects only):
+    (x p y), (p domain|range c) -> (end type c)."""
+
+    def build(v, s):
+        src = v.assertions if end == "subj" else v.uri
+        return _as_triples(
+            _on_pred(src, s).select(
+                F.col(end).alias("subj"),
+                F.lit(RDF.type).alias("pred"),
+                F.col("b").alias("obj"),
+            )
+        )
+
+    return build
+
+
+def _swap(key: str, pred: str):
+    """prp-inv1/2, prp-symp: (x p y:uri) with p in the slice's ``key``
+    column -> (y <column pred> x)."""
+
+    def build(v, s):
+        return _as_triples(
+            _on_pred(v.uri, s, key).select(
+                F.col("obj").alias("subj"),
+                F.col(pred).alias("pred"),
+                F.col("subj").alias("obj"),
+            )
+        )
+
+    return build
+
+
+def _equivalence(pred: str, propagate):
+    """cax-eqc1/2, prp-eqp1/2: the declaration both ways (scm-eqc2 /
+    scm-eqp2 twin), and ``propagate`` along the symmetric pairs."""
+
+    def build(v, s):
+        both = (
+            s.select("a", "b")
+            .unionByName(s.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+        )
+        decl = both.select(
+            F.col("a").alias("subj"), F.lit(pred).alias("pred"), F.col("b").alias("obj")
+        )
+        return _as_triples(decl).unionByName(propagate(v, both))
+
+    return build
+
+
+def _prp_trp(v, s):
+    """prp-trp: self-join of transitive-property assertions."""
+    edges = _on_pred(v.assertions, s).select("subj", "pred", "obj")
+    return _as_triples(
+        edges.alias("x")
+        .join(
+            edges.alias("y"),
+            (F.col("x.obj") == F.col("y.subj")) & (F.col("x.pred") == F.col("y.pred")),
+        )
+        .select(
+            F.col("x.subj").alias("subj"),
+            F.col("x.pred").alias("pred"),
+            F.col("y.obj").alias("obj"),
+        )
+    )
+
+
+def _prp_fp(v, s):
+    """prp-fp: two objects of a functional property for one subject are
+    the same individual.  The self-join keys on (subj, pred) — by
+    definition of functionality the per-key group is tiny, so the
+    shuffle has bounded fan-out at any corpus size.  Only the o1 < o2
+    direction is emitted; the CC-based sameAs pass closes
+    symmetry/transitivity without the k^2 pairwise blowup."""
+    inst = _on_pred(v.uri, s).select("subj", "pred", "obj")
+    return _as_triples(
+        inst.alias("x")
+        .join(
+            inst.alias("y"),
+            (F.col("x.subj") == F.col("y.subj"))
+            & (F.col("x.pred") == F.col("y.pred"))
+            & (F.col("x.obj") < F.col("y.obj")),
+        )
+        .select(
+            F.col("x.obj").alias("subj"),
+            F.lit(OWL.sameAs).alias("pred"),
+            F.col("y.obj").alias("obj"),
+        )
+    )
+
+
+def _prp_ifp(v, s):
+    """prp-ifp: two subjects sharing a value of an inverse-functional
+    property are the same individual.  Keys on the full object identity
+    (value + kind + lang + datatype) so literal-keyed identifiers
+    (emails, ISBNs) match exactly."""
+    inst = _on_pred(v.assertions, s).select(*TRIPLE_COLS)
+    return _as_triples(
+        inst.alias("x")
+        .join(
+            inst.alias("y"),
+            (F.col("x.pred") == F.col("y.pred"))
+            & (F.col("x.obj") == F.col("y.obj"))
+            & (F.col("x.obj_kind") == F.col("y.obj_kind"))
+            & F.col("x.obj_lang").eqNullSafe(F.col("y.obj_lang"))
+            & F.col("x.obj_dt").eqNullSafe(F.col("y.obj_dt"))
+            & (F.col("x.subj") < F.col("y.subj")),
+        )
+        .select(
+            F.col("x.subj").alias("subj"),
+            F.lit(OWL.sameAs).alias("pred"),
+            F.col("y.subj").alias("obj"),
+        )
+    )
+
+
+def _cls_hv(v, on_prop, has_val):
+    """cls-hv1/2: hasValue restrictions.  hv = (restriction node r,
+    onProperty p, value v with full literal identity) — schema-side
+    tiny, broadcast.  cls-hv1: (x type r) -> (x p v); cls-hv2:
+    (x p v) -> (x type r)."""
+    hv = (
+        on_prop.alias("o")
+        .join(has_val.alias("h"), F.col("o.a") == F.col("h.a"))
+        .select(
+            F.col("o.a").alias("r"),
+            F.col("o.b").alias("p"),
+            F.col("h.b").alias("v"),
+            F.col("h.b_kind").alias("vk"),
+            F.col("h.b_lang").alias("vl"),
+            F.col("h.b_dt").alias("vd"),
+        )
+    )
+    hv1 = v.types.join(F.broadcast(hv), v.types["c"] == hv["r"]).select(
+        F.col("x").alias("subj"),
+        F.col("p").alias("pred"),
+        F.col("v").alias("obj"),
+        F.col("vk").alias("obj_kind"),
+        F.col("vl").alias("obj_lang"),
+        F.col("vd").alias("obj_dt"),
+    )
+    a = v.assertions
+    hv2 = a.join(
+        F.broadcast(hv),
+        (a["pred"] == hv["p"])
+        & (a["obj"] == hv["v"])
+        & (a["obj_kind"] == hv["vk"])
+        & a["obj_lang"].eqNullSafe(hv["vl"])
+        & a["obj_dt"].eqNullSafe(hv["vd"]),
+    ).select("subj", F.lit(RDF.type).alias("pred"), F.col("r").alias("obj"))
+    return hv1.unionByName(_as_triples(hv2))
+
+
+#: (gates, owl-rl only, builder) — one entry per rule, in round order.
+_RULES = (
+    ([(RDFS.subClassOf, None)], False, _chain(RDFS.subClassOf)),  # rdfs11
+    ([(RDFS.subClassOf, None)], False, _retype),  # rdfs9
+    ([(RDFS.subPropertyOf, None)], False, _chain(RDFS.subPropertyOf)),  # rdfs5
+    ([(RDFS.subPropertyOf, None)], False, _repred),  # rdfs7
+    ([(RDFS.domain, None)], False, _typing("subj")),  # rdfs2
+    ([(RDFS.range, None)], False, _typing("obj")),  # rdfs3
+    ([(OWL.inverseOf, None)], False, _swap("a", "b")),  # prp-inv1
+    ([(OWL.inverseOf, None)], False, _swap("b", "a")),  # prp-inv2
+    ([(RDF.type, OWL.SymmetricProperty)], False, _swap("a", "pred")),  # prp-symp
+    ([(RDF.type, OWL.TransitiveProperty)], False, _prp_trp),
+    ([(OWL.equivalentClass, None)], True, _equivalence(OWL.equivalentClass, _retype)),
+    (
+        [(OWL.equivalentProperty, None)],
+        True,
+        _equivalence(OWL.equivalentProperty, _repred),
+    ),
+    ([(RDF.type, OWL.FunctionalProperty)], True, _prp_fp),
+    ([(RDF.type, OWL.InverseFunctionalProperty)], True, _prp_ifp),
+    ([(OWL.onProperty, None), (OWL.hasValue, None)], True, _cls_hv),
+)
+# gates the fixpoint loop reads: the sameAs (CC) pass and property chains
+_SAME_AS = (OWL.sameAs, None)
+_CHAIN = (OWL.propertyChainAxiom, None)
+_GATES = tuple(
+    dict.fromkeys([g for gates, _, _ in _RULES for g in gates] + [_SAME_AS, _CHAIN])
+)
 
 
 def _schema_probe(triples: DataFrame) -> tuple[int, dict]:
-    """ONE tiny aggregation returning (row_count, schema_flags).
+    """ONE tiny aggregation returning (row_count, {gate: non-empty}).
 
-    The flags gate rule joins: each join below is built only when its
-    (broadcast-side) schema slice is non-empty.  At fixture scale this
-    halves the per-round DAG; at corpus scale it skips instance-wide
-    joins that provably produce nothing.  Sound inside the fixpoint: a
-    rule's schema slice can only become non-empty in a round that added
-    triples, and the probe is recomputed every round.
+    The gates (``_GATES``, from the rule table) gate rule joins: each
+    join is built only when its (broadcast-side) schema slice is
+    non-empty.  At fixture scale this halves the per-round DAG; at
+    corpus scale it skips instance-wide joins that provably produce
+    nothing.  Sound inside the fixpoint: a rule's schema slice can only
+    become non-empty in a round that added triples, and the probe is
+    recomputed every round.
 
     The count rides in the same aggregation because the fixpoint loop
     uses it as its convergence witness (the known set grows
     monotonically, so an unchanged count means no new triples) — one
-    collect per round covers BOTH the convergence probe and the flag
+    collect per round covers BOTH the convergence probe and the gate
     re-probe, where the earlier shape paid separate exceptAll +
     isEmpty + flags jobs."""
-
-    def has(cond):
-        return F.max(cond.cast("int"))
-
-    is_type = F.col("pred") == RDF.type
     row = triples.select(
-        F.count(F.lit(1)).alias("n_rows"),
-        has(F.col("pred") == RDFS.subClassOf).alias("sub_class"),
-        has(F.col("pred") == RDFS.subPropertyOf).alias("sub_prop"),
-        has(F.col("pred") == RDFS.domain).alias("domain"),
-        has(F.col("pred") == RDFS.range).alias("range"),
-        has(F.col("pred") == OWL.inverseOf).alias("inverse"),
-        has(is_type & (F.col("obj") == OWL.SymmetricProperty)).alias("symmetric"),
-        has(is_type & (F.col("obj") == OWL.TransitiveProperty)).alias("transitive"),
-        has(is_type & (F.col("obj") == OWL.FunctionalProperty)).alias("functional"),
-        has(is_type & (F.col("obj") == OWL.InverseFunctionalProperty)).alias(
-            "inv_functional"
-        ),
-        has(F.col("pred") == OWL.equivalentClass).alias("eq_cls"),
-        has(F.col("pred") == OWL.equivalentProperty).alias("eq_prp"),
-        has(F.col("pred") == OWL.onProperty).alias("onprop"),
-        has(F.col("pred") == OWL.hasValue).alias("hasval"),
-        has(F.col("pred") == OWL.sameAs).alias("sameas"),
-        has(F.col("pred") == OWL.propertyChainAxiom).alias("chain"),
+        F.count(F.lit(1)),
+        *[F.max(_gate_cond(g).cast("int")) for g in _GATES],
     ).collect()[0]
-    d = row.asDict()
-    n = int(d.pop("n_rows"))
-    return n, {k: bool(v) for k, v in d.items()}
+    return int(row[0]), {g: bool(on) for g, on in zip(_GATES, row[1:])}
 
 
-def _round(
-    triples: DataFrame,
-    with_equivalence: bool = False,
-    flags: dict | None = None,
-) -> DataFrame:
-    """One application of every rule; returns candidate triples
-    (may include already-known ones — caller subtracts).
+def _round(triples: DataFrame, with_equivalence: bool, flags: dict) -> DataFrame:
+    """One application of every rule in ``_RULES`` whose gates are all
+    non-empty in ``flags`` (``_schema_probe``); returns candidate
+    triples (may include already-known ones — caller subtracts).
 
-    ``with_equivalence`` adds the OWL-RL equivalence/identity rules
-    (cax-eqc1/2, prp-eqp1/2, prp-fp/ifp, cls-hv1/2) — the ``owl-rl``
-    profile (reference ``apply_reasoning(profile='owl-rl')``,
+    ``with_equivalence`` adds the owl-rl only rules (cax-eqc1/2,
+    prp-eqp1/2, prp-fp/ifp, cls-hv1/2) — the ``owl-rl`` profile
+    (reference ``apply_reasoning(profile='owl-rl')``,
     ``ontology_manager.py:2859-2860``).
 
-    ``flags`` (see ``_schema_flags``) gates each rule join on its schema
-    slice being non-empty, so a round only executes the joins that can
-    fire.  When omitted, the probe runs here."""
-    if flags is None:
-        flags = _schema_flags(triples)
-    types = triples.filter(F.col("pred") == RDF.type).select(
-        F.col("subj").alias("s"), F.col("obj").alias("c")
+    sameAs closure is deliberately NOT a pairwise rule here — a
+    k-member clique would materialize k^2 intermediates in every round.
+    ``apply_reasoning`` routes it through ``fixpoint.connected_components``
+    (one O(log n) pass) instead."""
+    v = SimpleNamespace(
+        types=triples.filter(F.col("pred") == RDF.type).select(
+            F.col("subj").alias("x"), F.col("obj").alias("c")
+        ),
+        assertions=triples.filter(
+            ~F.col("pred").isin(RDF.type, RDFS.subClassOf, RDFS.subPropertyOf)
+        ).select(*TRIPLE_COLS),
     )
-    assertions = triples.filter(
-        ~F.col("pred").isin(RDF.type, RDFS.subClassOf, RDFS.subPropertyOf)
-    ).select("subj", "pred", "obj", "obj_kind", "obj_lang", "obj_dt")
-
-    out: list[DataFrame] = []
-
-    if flags["sub_class"]:
-        sub_class = triples.filter(F.col("pred") == RDFS.subClassOf).select(
-            F.col("subj").alias("c"), F.col("obj").alias("d")
-        )
-        # rdfs11: subClassOf transitivity
-        out.append(
-            _as_triples(
-                sub_class.alias("a")
-                .join(
-                    F.broadcast(sub_class.alias("b")),
-                    F.col("a.d") == F.col("b.c"),
-                )
-                .select(
-                    F.col("a.c").alias("subj"),
-                    F.lit(RDFS.subClassOf).alias("pred"),
-                    F.col("b.d").alias("obj"),
-                )
-            )
-        )
-        # rdfs9: type propagation up the hierarchy
-        out.append(
-            _as_triples(
-                types.join(F.broadcast(sub_class), types["c"] == sub_class["c"])
-                .select(
-                    F.col("s").alias("subj"),
-                    F.lit(RDF.type).alias("pred"),
-                    F.col("d").alias("obj"),
-                )
-            )
-        )
-    if flags["sub_prop"]:
-        sub_prop = triples.filter(F.col("pred") == RDFS.subPropertyOf).select(
-            F.col("subj").alias("p"), F.col("obj").alias("q")
-        )
-        # rdfs5: subPropertyOf transitivity
-        out.append(
-            _as_triples(
-                sub_prop.alias("a")
-                .join(
-                    F.broadcast(sub_prop.alias("b")),
-                    F.col("a.q") == F.col("b.p"),
-                )
-                .select(
-                    F.col("a.p").alias("subj"),
-                    F.lit(RDFS.subPropertyOf).alias("pred"),
-                    F.col("b.q").alias("obj"),
-                )
-            )
-        )
-        # rdfs7: assertion propagation up subPropertyOf (keeps term kind)
-        out.append(
-            assertions.join(
-                F.broadcast(sub_prop), assertions["pred"] == sub_prop["p"]
-            ).select(
-                "subj", F.col("q").alias("pred"), "obj",
-                "obj_kind", "obj_lang", "obj_dt",
-            )
-        )
-    if flags["domain"]:
-        domain = triples.filter(F.col("pred") == RDFS.domain).select(
-            F.col("subj").alias("p"), F.col("obj").alias("c")
-        )
-        # rdfs2: domain -> subject type
-        out.append(
-            _as_triples(
-                assertions.join(
-                    F.broadcast(domain), assertions["pred"] == domain["p"]
-                ).select(
-                    F.col("subj"),
-                    F.lit(RDF.type).alias("pred"),
-                    F.col("c").alias("obj"),
-                )
-            )
-        )
-    if flags["range"]:
-        range_ = triples.filter(F.col("pred") == RDFS.range).select(
-            F.col("subj").alias("p"), F.col("obj").alias("c")
-        )
-        # rdfs3: range -> object type (URI objects only)
-        out.append(
-            _as_triples(
-                assertions.filter(F.col("obj_kind") == "uri")
-                .join(F.broadcast(range_), assertions["pred"] == range_["p"])
-                .select(
-                    F.col("obj").alias("subj"),
-                    F.lit(RDF.type).alias("pred"),
-                    F.col("c").alias("obj"),
-                )
-            )
-        )
-    if flags["inverse"]:
-        inverse = triples.filter(F.col("pred") == OWL.inverseOf).select(
-            F.col("subj").alias("p"), F.col("obj").alias("q")
-        )
-        # prp-inv
-        out.append(
-            _as_triples(
-                assertions.filter(F.col("obj_kind") == "uri")
-                .join(F.broadcast(inverse), assertions["pred"] == inverse["p"])
-                .select(
-                    F.col("obj").alias("subj"),
-                    F.col("q").alias("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-        )
-        out.append(
-            _as_triples(
-                assertions.filter(F.col("obj_kind") == "uri")
-                .join(F.broadcast(inverse), assertions["pred"] == inverse["q"])
-                .select(
-                    F.col("obj").alias("subj"),
-                    F.col("p").alias("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-        )
-    if flags["symmetric"]:
-        symmetric = triples.filter(
-            (F.col("pred") == RDF.type) & (F.col("obj") == OWL.SymmetricProperty)
-        ).select(F.col("subj").alias("p"))
-        # prp-symp
-        out.append(
-            _as_triples(
-                assertions.filter(F.col("obj_kind") == "uri")
-                .join(
-                    F.broadcast(symmetric), assertions["pred"] == symmetric["p"]
-                )
-                .select(
-                    F.col("obj").alias("subj"),
-                    F.col("pred"),
-                    F.col("subj").alias("obj"),
-                )
-            )
-        )
-    if flags["transitive"]:
-        transitive = triples.filter(
-            (F.col("pred") == RDF.type)
-            & (F.col("obj") == OWL.TransitiveProperty)
-        ).select(F.col("subj").alias("p"))
-        # prp-trp (self-join of transitive-property assertions)
-        trans_edges = assertions.join(
-            F.broadcast(transitive), assertions["pred"] == transitive["p"]
-        ).select("subj", "pred", "obj")
-        out.append(
-            _as_triples(
-                trans_edges.alias("a")
-                .join(
-                    trans_edges.alias("b"),
-                    (F.col("a.obj") == F.col("b.subj"))
-                    & (F.col("a.pred") == F.col("b.pred")),
-                )
-                .select(
-                    F.col("a.subj").alias("subj"),
-                    F.col("a.pred").alias("pred"),
-                    F.col("b.obj").alias("obj"),
-                )
-            )
-        )
-    # NOTE: sameAs closure deliberately NOT a pairwise rule here — a
-    # k-member clique would materialize k^2 intermediates in every
-    # round.  ``apply_reasoning`` routes it through
-    # ``fixpoint.connected_components`` (one O(log n) pass) instead.
-
-    if with_equivalence and flags["eq_cls"]:
-        eq_cls = triples.filter(F.col("pred") == OWL.equivalentClass).select(
-            F.col("subj").alias("c"), F.col("obj").alias("d")
-        )
-        eq_cls = eq_cls.unionByName(
-            eq_cls.select(F.col("d").alias("c"), F.col("c").alias("d"))
-        ).distinct()
-        # scm-eqc2 twin: symmetry of the declaration itself
-        out.append(
-            _as_triples(
-                eq_cls.select(
-                    F.col("c").alias("subj"),
-                    F.lit(OWL.equivalentClass).alias("pred"),
-                    F.col("d").alias("obj"),
-                )
-            )
-        )
-        # cax-eqc1/2: type propagation across equivalentClass
-        out.append(
-            _as_triples(
-                types.join(F.broadcast(eq_cls), types["c"] == eq_cls["c"])
-                .select(
-                    F.col("s").alias("subj"),
-                    F.lit(RDF.type).alias("pred"),
-                    F.col("d").alias("obj"),
-                )
-            )
-        )
-    if with_equivalence and flags["eq_prp"]:
-        eq_prp = triples.filter(F.col("pred") == OWL.equivalentProperty).select(
-            F.col("subj").alias("p"), F.col("obj").alias("q")
-        )
-        eq_prp = eq_prp.unionByName(
-            eq_prp.select(F.col("q").alias("p"), F.col("p").alias("q"))
-        ).distinct()
-        out.append(
-            _as_triples(
-                eq_prp.select(
-                    F.col("p").alias("subj"),
-                    F.lit(OWL.equivalentProperty).alias("pred"),
-                    F.col("q").alias("obj"),
-                )
-            )
-        )
-        # prp-eqp1/2: assertion propagation across equivalentProperty
-        out.append(
-            assertions.join(F.broadcast(eq_prp), assertions["pred"] == eq_prp["p"])
-            .select(
-                "subj", F.col("q").alias("pred"), "obj",
-                "obj_kind", "obj_lang", "obj_dt",
-            )
-        )
-    if with_equivalence and flags["functional"]:
-        # prp-fp: two objects of a functional property for one subject
-        # are the same individual.  The self-join keys on (subj, pred) —
-        # by definition of functionality the per-key group is tiny, so
-        # the shuffle has bounded fan-out at any corpus size.  Only the
-        # o1 < o2 direction is emitted; the CC-based sameAs pass closes
-        # symmetry/transitivity without the k^2 pairwise blowup.
-        functional = triples.filter(
-            (F.col("pred") == RDF.type)
-            & (F.col("obj") == OWL.FunctionalProperty)
-        ).select(F.col("subj").alias("p"))
-        fp_inst = (
-            assertions.filter(F.col("obj_kind") == "uri")
-            .join(F.broadcast(functional), assertions["pred"] == functional["p"])
-            .select("subj", "pred", "obj")
-        )
-        out.append(
-            _as_triples(
-                fp_inst.alias("a")
-                .join(
-                    fp_inst.alias("b"),
-                    (F.col("a.subj") == F.col("b.subj"))
-                    & (F.col("a.pred") == F.col("b.pred"))
-                    & (F.col("a.obj") < F.col("b.obj")),
-                )
-                .select(
-                    F.col("a.obj").alias("subj"),
-                    F.lit(OWL.sameAs).alias("pred"),
-                    F.col("b.obj").alias("obj"),
-                )
-            )
-        )
-    if with_equivalence and flags["inv_functional"]:
-        # prp-ifp: two subjects sharing a value of an inverse-functional
-        # property are the same individual.  Keys on the full object
-        # identity (value + kind + lang + datatype) so literal-keyed
-        # identifiers (emails, ISBNs) match exactly.
-        inv_functional = triples.filter(
-            (F.col("pred") == RDF.type)
-            & (F.col("obj") == OWL.InverseFunctionalProperty)
-        ).select(F.col("subj").alias("p"))
-        ifp_inst = (
-            assertions.join(
-                F.broadcast(inv_functional),
-                assertions["pred"] == inv_functional["p"],
-            )
-            .select("subj", "pred", "obj", "obj_kind", "obj_lang", "obj_dt")
-        )
-        out.append(
-            _as_triples(
-                ifp_inst.alias("a")
-                .join(
-                    ifp_inst.alias("b"),
-                    (F.col("a.pred") == F.col("b.pred"))
-                    & (F.col("a.obj") == F.col("b.obj"))
-                    & (F.col("a.obj_kind") == F.col("b.obj_kind"))
-                    & F.col("a.obj_lang").eqNullSafe(F.col("b.obj_lang"))
-                    & F.col("a.obj_dt").eqNullSafe(F.col("b.obj_dt"))
-                    & (F.col("a.subj") < F.col("b.subj")),
-                )
-                .select(
-                    F.col("a.subj").alias("subj"),
-                    F.lit(OWL.sameAs).alias("pred"),
-                    F.col("b.subj").alias("obj"),
-                )
-            )
-        )
-    if with_equivalence and flags["onprop"] and flags["hasval"]:
-        # cls-hv1/2: hasValue restrictions.  hv = (restriction node r,
-        # onProperty p, value v with full literal identity) — schema-side
-        # tiny, broadcast.
-        onprop = triples.filter(F.col("pred") == OWL.onProperty).select(
-            F.col("subj").alias("r"), F.col("obj").alias("p")
-        )
-        hasval = triples.filter(F.col("pred") == OWL.hasValue).select(
-            F.col("subj").alias("r2"),
-            F.col("obj").alias("v"),
-            F.col("obj_kind").alias("vk"),
-            F.col("obj_lang").alias("vl"),
-            F.col("obj_dt").alias("vd"),
-        )
-        hv = onprop.join(hasval, onprop["r"] == hasval["r2"]).select(
-            "r", "p", "v", "vk", "vl", "vd"
-        )
-        # cls-hv1: (x type r) -> (x p v)
-        out.append(
-            types.join(F.broadcast(hv), types["c"] == hv["r"]).select(
-                F.col("s").alias("subj"),
-                F.col("p").alias("pred"),
-                F.col("v").alias("obj"),
-                F.col("vk").alias("obj_kind"),
-                F.col("vl").alias("obj_lang"),
-                F.col("vd").alias("obj_dt"),
-            )
-        )
-        # cls-hv2: (x p v) -> (x type r)
-        out.append(
-            _as_triples(
-                assertions.join(
-                    F.broadcast(hv),
-                    (assertions["pred"] == hv["p"])
-                    & (assertions["obj"] == hv["v"])
-                    & (assertions["obj_kind"] == hv["vk"])
-                    & assertions["obj_lang"].eqNullSafe(hv["vl"])
-                    & assertions["obj_dt"].eqNullSafe(hv["vd"]),
-                ).select(
-                    F.col("subj"),
-                    F.lit(RDF.type).alias("pred"),
-                    F.col("r").alias("obj"),
-                )
-            )
-        )
-
+    v.uri = v.assertions.filter(F.col("obj_kind") == "uri")
+    slices = {g: _slice(triples, g) for g, on in flags.items() if on}
+    out = [
+        build(v, *[slices[g] for g in gates])
+        for gates, owl_rl_only, build in _RULES
+        if (with_equivalence or not owl_rl_only) and all(flags[g] for g in gates)
+    ]
     if not out:
         return triples.limit(0)
-    candidates = out[0]
-    for o in out[1:]:
-        candidates = candidates.unionByName(o)
-    return candidates.dropDuplicates(TRIPLE_COLS)
+    return reduce(DataFrame.unionByName, out).dropDuplicates(TRIPLE_COLS)
 
 
 # --------------------------------------------------------------------------
@@ -541,34 +446,11 @@ def sameas_components(triples: DataFrame) -> DataFrame:
     return connected_components(edges)
 
 
-def closure_from_components(cc: DataFrame, include_self: bool = False) -> DataFrame:
-    """sameAs closure pairs from an already-computed (node, component)
-    map — lets ``apply_reasoning`` share ONE CC pass between the closure
-    and the eq-rep substitution instead of recomputing components."""
-    a = cc.alias("a")
-    b = cc.alias("b")
-    pairs = a.join(b, F.col("a.component") == F.col("b.component"))
-    if not include_self:
-        pairs = pairs.filter(F.col("a.node") != F.col("b.node"))
-    return _as_triples(
-        pairs
-        .select(
-            F.col("a.node").alias("subj"),
-            F.lit(OWL.sameAs).alias("pred"),
-            F.col("b.node").alias("obj"),
-        )
-    )
-
-
-def eq_rep(triples: DataFrame, cc: DataFrame) -> DataFrame:
+def eq_rep(triples: DataFrame, sib: DataFrame) -> DataFrame:
     """owlrl eq-rep-s / eq-rep-p / eq-rep-o: copy every triple with each
-    subject/predicate/object replaced by its sameAs siblings.  Joins the
-    (node, comp) map — per-clique expansion, no global self-join."""
-    sib = (
-        cc.alias("a")
-        .join(cc.alias("b"), F.col("a.component") == F.col("b.component"))
-        .select(F.col("a.node").alias("node"), F.col("b.node").alias("twin"))
-    )
+    subject/predicate/object replaced by its sameAs siblings.  ``sib`` is
+    the (node, twin) sibling pairs of the (node, component) map —
+    per-clique expansion, no global self-join."""
     s_rep = (
         triples.join(sib, triples["subj"] == sib["node"])
         .select(
@@ -597,6 +479,20 @@ def eq_rep(triples: DataFrame, cc: DataFrame) -> DataFrame:
     )
 
 
+def _grow(*parts: DataFrame) -> tuple[DataFrame, int, dict]:
+    """The known set grown by ``parts``: union, dedup and checkpoint it,
+    then ``_schema_probe`` it — (grown, row_count, gates), two jobs."""
+    grown = (
+        reduce(DataFrame.unionByName, parts)
+        .dropDuplicates(TRIPLE_COLS)
+        .localCheckpoint(eager=True)
+    )
+    return (grown, *_schema_probe(grown))
+
+
+_PROFILES = ("rdfs", "owl-rl", "owl-rl-ext")
+
+
 def apply_reasoning(
     triples: DataFrame, max_rounds: int = 20, profile: str = "rdfs"
 ) -> tuple[DataFrame, int]:
@@ -604,45 +500,39 @@ def apply_reasoning(
     matching the reference's ``apply_reasoning`` return contract
     (``ontology_manager.py:2853-2864``).
 
-    Profiles (reference ``:2857-2862``):
+    Profiles (reference ``:2857-2862``; anything else is a ValueError):
       * ``rdfs``   — the rule set above + sameAs symmetric-transitive
         closure (via connected components, NOT a pairwise fixpoint);
-      * ``owl-rl`` — adds equivalentClass/equivalentProperty rules and
-        eq-rep-s/p/o sameAs substitution (owlrl's materialization).
+      * ``owl-rl`` / ``owl-rl-ext`` — adds equivalentClass/
+        equivalentProperty, prp-fp/ifp, cls-hv and property-chain rules
+        and eq-rep-s/p/o sameAs substitution (owlrl's materialization).
 
     Structure: inner loop = broadcast-join rule rounds to fixpoint;
     then one CC pass handles ALL equality inference for the round; an
     outer loop re-enters the rules only if equality produced new facts
     (it can: a substituted triple may re-trigger e.g. rdfs2).
 
-    Per-round driver cost is exactly TWO jobs — the checkpoint of the
-    grown set and one combined count+flags aggregation
-    (``_schema_probe``).  The known set grows monotonically under
-    union, so an unchanged count is a complete convergence witness;
-    this replaces the earlier exceptAll-the-candidates + isEmpty +
-    separate flag probe (4 jobs/round).  The fixpoint loop is the only
-    serial driver-side cost in the engine, so per-round latency is what
-    Amdahl charges against scaled-up clusters.
+    Per-round driver cost is exactly TWO jobs (``_grow``) — the
+    checkpoint of the grown set and one combined count+gates
+    aggregation (``_schema_probe``).  The known set grows monotonically
+    under union, so an unchanged count is a complete convergence
+    witness; this replaces the earlier exceptAll-the-candidates +
+    isEmpty + separate flag probe (4 jobs/round).  The fixpoint loop is
+    the only serial driver-side cost in the engine, so per-round
+    latency is what Amdahl charges against scaled-up clusters.
     """
-    with_eq = profile in ("owl-rl", "owl-rl-ext")
-    current = triples.dropDuplicates(TRIPLE_COLS).localCheckpoint(eager=True)
-    n, flags = _schema_probe(current)
+    if profile not in _PROFILES:
+        raise ValueError(f"unknown profile {profile!r}; expected one of {_PROFILES}")
+    with_eq = profile != "rdfs"
+    current, n, flags = _grow(triples)
     n0 = n
     for _outer in range(4):
         grew_inner = False
         for _ in range(max_rounds):
-            grown = (
-                current.unionByName(
-                    _round(current, with_equivalence=with_eq, flags=flags)
-                )
-                .dropDuplicates(TRIPLE_COLS)
-                .localCheckpoint(eager=True)
-            )
-            # one collect: convergence count + re-probed schema flags
-            # (a round may derive new schema facts, e.g. a property
-            # typed Functional via rdfs9)
-            n2, flags = _schema_probe(grown)
-            current = grown
+            # the probe re-reads the gates every round (a round may
+            # derive new schema facts, e.g. a property typed Functional
+            # via rdfs9)
+            current, n2, flags = _grow(current, _round(current, with_eq, flags))
             if n2 == n:
                 break
             n = n2
@@ -651,44 +541,45 @@ def apply_reasoning(
         # fixpoint; a derived edge can re-trigger every rule family,
         # so new chain facts re-enter the rule loop via the outer
         # iteration instead of special-casing the inner one
-        if with_eq and flags.get("chain"):
+        if with_eq and flags[_CHAIN]:
             new_chain = apply_property_chains(current)
             if not new_chain.isEmpty():
-                current = (
-                    current.unionByName(new_chain)
-                    .dropDuplicates(TRIPLE_COLS)
-                    .localCheckpoint(eager=True)
-                )
-                n, flags = _schema_probe(current)
+                current, n, flags = _grow(current, new_chain)
                 continue
         # equality reasoning: one CC pass per outer round (skipped
         # entirely when the graph asserts no sameAs — the common case
-        # for pure-RDFS ontologies; the flag probe already covers it)
-        if not flags["sameas"]:
+        # for pure-RDFS ontologies; the gate probe already covers it)
+        if not flags[_SAME_AS]:
             break
         # after the first eq pass, an inner loop that added nothing
         # means the graph is unchanged since that pass — equality is
         # already at fixpoint, so the would-be CC round is redundant
         if _outer > 0 and not grew_inner:
             break
-        # include_self under owl-rl: eq-rep would derive the reflexive
-        # pairs anyway on the NEXT outer round; emitting them with the
-        # closure reaches the same fixpoint one outer round (and one CC
-        # pass) earlier.  The component map is computed ONCE and shared
-        # by the closure pairs and the eq-rep substitution.
+        # The component map is computed ONCE and its sibling pairs feed
+        # both the closure and the eq-rep substitution.  Self pairs stay
+        # under owl-rl: eq-rep would derive the reflexive pairs anyway on
+        # the NEXT outer round; emitting them with the closure reaches
+        # the same fixpoint one outer round (and one CC pass) earlier.
         cc = sameas_components(current).localCheckpoint(eager=True)
-        eq_new = closure_from_components(cc, include_self=with_eq)
-        if with_eq:
-            eq_new = eq_new.unionByName(eq_rep(current, cc))
-        grown = (
-            current.unionByName(eq_new)
-            .dropDuplicates(TRIPLE_COLS)
-            .localCheckpoint(eager=True)
+        sib = (
+            cc.alias("a")
+            .join(cc.alias("b"), F.col("a.component") == F.col("b.component"))
+            .select(F.col("a.node").alias("node"), F.col("b.node").alias("twin"))
         )
-        # substitution can move schema facts onto new nodes — re-probe
-        # (same single collect doubles as the convergence witness)
-        n2, flags = _schema_probe(grown)
-        current = grown
+        pairs = sib if with_eq else sib.filter(F.col("node") != F.col("twin"))
+        eq_new = _as_triples(
+            pairs.select(
+                F.col("node").alias("subj"),
+                F.lit(OWL.sameAs).alias("pred"),
+                F.col("twin").alias("obj"),
+            )
+        )
+        if with_eq:
+            eq_new = eq_new.unionByName(eq_rep(current, sib))
+        # substitution can move schema facts onto new nodes — the probe
+        # in ``_grow`` re-reads the gates
+        current, n2, flags = _grow(current, eq_new)
         if n2 == n:
             break
         n = n2

@@ -1158,6 +1158,11 @@ def owl_rl_profile(triples: DataFrame) -> DataFrame:
     owl:unionOf / oneOf / ... — sugar for an equivalence, so it takes
     the equivalence grammar).
 
+    Depth limit: positions are one level deep.  Only the expression node
+    sitting directly in a position is classified; the members of its
+    ``rdf:first``/``rdf:rest`` lists and the fillers of nested
+    restrictions are not walked.
+
     Scale shape: the construct classification is one filtered
     projection; positions are filtered projections unioned; the check
     is one equi-join on the expression node against a class-vocabulary-

@@ -81,20 +81,9 @@ def get_spark(
         # 209s on the same job) — oversized G1 heaps hurt in this VM.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Shuffle compression stays at the Spark default (ON): an A/B
-        # at 2M pages / local[8] measured 53.9 s compressed vs 70.1 s
-        # uncompressed — at real shuffle volumes the LZ4 CPU buys back
-        # multiples in I/O, here and on any cluster.  (An earlier
-        # tiny-leg suite win from disabling it did not replicate across
-        # host-noise windows; env knob kept for measurement only.)
-        .config(
-            "spark.shuffle.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"),
-        )
-        .config(
-            "spark.shuffle.spill.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"),
-        )
+        # Shuffle (and spill) compression stays at the Spark default, ON:
+        # at 2M pages / local[8] it measured 53.9 s compressed vs 70.1 s
+        # uncompressed.
     )
     if master.startswith("local"):
         # single executor in local mode — locality levels don't exist,

@@ -141,6 +141,12 @@ def test_checkpoint_resume(spark, pages_df, tmp_path):
         entries = [json.loads(l) for l in fh]
     assert len(entries) == 4
     assert all(e["n_triples"] > 0 for e in entries)
+    raw = spark.read.parquet(os.path.join(out, "raw_triples"))
+    assert sum(e["n_triples"] for e in entries) == raw.count()
+    assert (
+        sum(e["n_urls"] for e in entries)
+        == raw.select("source_url").distinct().count()
+    )
     n_before = os.path.getsize(manifest)
     # resume: nothing re-runs, manifest unchanged
     R.run_pipeline(spark, pages_df, out, n_slices=4)

@@ -270,6 +270,19 @@ def test_rdfs_profile_skips_owl_identity_rules(spark):
     assert out.filter(out.pred == OWL.sameAs).count() == 0
 
 
+@pytest.mark.parametrize("profile", ["owl_rl", "OWL-RL"])
+def test_unknown_profile_rejected_before_any_job(spark, profile):
+    """A misspelt profile must raise, not silently run the rdfs rules."""
+    df = spark.createDataFrame(
+        [t_uri(B + "A", RDFS.subClassOf, B + "B")], TRIPLES_SCHEMA
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="profile"):
+        reasoning.apply_reasoning(df, profile=profile)
+    assert set(tracker.getJobIdsForGroup(None)) <= before
+
+
 def test_functional_declaration_derived_mid_fixpoint(spark):
     """prp-fp must fire even when the FunctionalProperty typing is only
     DERIVED during the fixpoint (rdfs9 through a subclass of
