@@ -1,16 +1,16 @@
 """Driver-side fixpoint controller (SURVEY.md §2.9, M4).
 
-The only genuinely iterative engine code.  Each round submits one Spark job;
-``localCheckpoint`` truncates lineage so plans stay bounded across rounds
+Each round of an engine loop is one eager ``localCheckpoint`` whose own
+job also reports the round's convergence metrics (:func:`checkpoint_observed`,
+no separate probe job); :func:`converge` loops it until a round changes no
+row.  The checkpoint truncates lineage so plans stay bounded across rounds
 (without it the logical plan doubles per iteration and Catalyst analysis
 time blows up long before the data does).
 
 Instantiated for:
   * transitive closure of an edge set (reference ``_expand_superclasses``
-    BFS, ``ontology_manager.py:2773-2785``) — frontier semi-join variant:
-    each round extends current paths by one hop and anti-joins out the
-    already-known pairs, so work per round is proportional to the NEW
-    pairs, not the whole closure;
+    BFS, ``ontology_manager.py:2773-2785``) — doubling variant,
+    O(log depth) rounds;
   * connected components (alternating large-star/small-star, after
     Kiveris et al. "Connected Components in MapReduce and Beyond") for
     ``owl:sameAs`` / ``skos:exactMatch`` canonicalization — the reference
@@ -21,12 +21,64 @@ Instantiated for:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+#: :func:`converge`'s round cap; the loops here take O(log n) rounds
+MAX_ROUNDS = 50
+
+
+def checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` eagerly local-checkpointed, and the aggregate ``metrics``
+    (name -> aggregate column) over its rows, read from the same job.
+
+    Pass ``df`` after its last shuffle: the metrics then run in the
+    result stage, where Spark merges each partition's accumulator update
+    once, so counts are exact.  Over no rows ``sum``/``max`` read None."""
+    obs = Observation()
+    out = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+    return out.localCheckpoint(eager=True), obs.get
+
+
+def converge(
+    state: DataFrame,
+    step: Callable[[DataFrame], tuple[DataFrame, Column]],
+    max_rounds: int = MAX_ROUNDS,
+) -> tuple[DataFrame, bool]:
+    """Run ``state = step(state)`` until a round changes no row, or for
+    ``max_rounds`` rounds; returns (state, converged).
+
+    ``step`` returns the next state and a boolean column flagging its
+    changed rows; each round's :func:`checkpoint_observed` job sums the
+    flags (None: no rows, converged).  A changed-row sum, unlike a count
+    comparison, cannot stop the loop early if a stage is recomputed."""
+    for _ in range(max_rounds):
+        nxt, changed = step(state)
+        state, m = checkpoint_observed(nxt, changed=F.sum(changed.cast("int")))
+        if not m["changed"]:
+            return state, True
+    return state, False
+
+
+def union_new(
+    old: DataFrame, new: DataFrame, keys: list[str]
+) -> tuple[DataFrame, Column]:
+    """``old`` grown by ``new``, deduplicated on ``keys``, with the flag
+    of the rows ``old`` lacked — a monotone round's union + distinct
+    and its convergence flag in one shuffle (adds column ``known``)."""
+    grown = (
+        old.select(*keys, F.lit(True).alias("known"))
+        .unionByName(new.select(*keys, F.lit(False).alias("known")))
+        .groupBy(*keys)
+        .agg(F.max("known").alias("known"))
+    )
+    return grown, ~F.col("known")
 
 
 def transitive_closure(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 50
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """All (src, dst) pairs reachable via 1+ hops.
 
@@ -34,41 +86,27 @@ def transitive_closure(
     graphs converge in O(log D) rounds — at web scale that is the
     difference between 3 and 40 shuffles for a depth-20 hierarchy.
 
-    Per-round cost is ONE shuffle (the union+distinct) and two driver
-    jobs (checkpoint, count).  Convergence is probed by comparing the
-    closure's row count across rounds — monotone growth makes count a
-    complete fixpoint witness, and counting checkpointed partitions is
-    a scan, so this replaces the earlier exceptAll-delta probe (a second
-    full-closure shuffle plus a third job per round).  Like the
-    connected-components probe above, per-round driver latency is the
-    serial cost Amdahl charges against scaled-up clusters.
+    Per-round cost is ONE shuffle (:func:`union_new`'s) and one driver
+    action, the checkpoint, which also counts the new pairs.
     """
-    closure = edges.select(src, dst).distinct().localCheckpoint(eager=True)
-    prev = closure.count()
-    for _ in range(max_rounds):
+
+    def step(closure: DataFrame) -> tuple[DataFrame, Column]:
         grown = (
             closure.alias("a")
-            .join(
-                closure.alias("b"),
-                F.col(f"a.{dst}") == F.col(f"b.{src}"),
-            )
+            .join(closure.alias("b"), F.col(f"a.{dst}") == F.col(f"b.{src}"))
             .select(F.col(f"a.{src}").alias(src), F.col(f"b.{dst}").alias(dst))
         )
-        closure = (
-            closure.unionByName(grown).distinct().localCheckpoint(eager=True)
-        )
-        n = closure.count()
-        if n == prev:
-            break
-        prev = n
-    return closure
+        return union_new(closure, grown, [src, dst])
+
+    closure = edges.select(src, dst).distinct().localCheckpoint(eager=True)
+    closure, _ = converge(closure, step)
+    return closure.select(src, dst)
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
     assume_clean_pairs: bool = False,
 ) -> DataFrame:
     """Undirected connected components; returns (node, component) with
@@ -122,7 +160,9 @@ def connected_components(
         .select("node", F.least(F.col("node"), F.col("mv")).alias("comp"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+
+    def step(parent: DataFrame) -> tuple[DataFrame, Column]:
+        parent = parent.select("node", "comp")
         # propagate: comp[v] = min(comp[v], min over neighbors u of comp[u])
         nbr_min = (
             sym.join(parent.withColumnRenamed("node", "u"), "u")
@@ -140,11 +180,8 @@ def connected_components(
             )
         )
         # pointer jumping: comp[v] = comp[comp[v]] (halves chain length).
-        # prev_comp rides along so the convergence probe below is a scan
-        # of the checkpointed partitions — not another join + shuffle
-        # (one fewer driver job round-trip per round; the fixpoint loop
-        # is the pipeline's only serial driver-side cost, so per-round
-        # latency is what Amdahl charges against the scaled-up legs).
+        # prev_comp rides along so the changed flag is a column of the
+        # checkpointed round, not another join.
         jumped = (
             new_parent.alias("a")
             .join(
@@ -161,12 +198,10 @@ def connected_components(
                 ),
                 F.col("a.prev_comp"),
             )
-            .localCheckpoint(eager=True)
         )
-        converged = jumped.filter(F.col("comp") != F.col("prev_comp")).limit(1).isEmpty()
-        parent = jumped.select("node", "comp")
-        if converged:
-            break
+        return jumped, F.col("comp") != F.col("prev_comp")
+
+    parent, _ = converge(parent, step)
     return parent.select("node", F.col("comp").alias("component"))
 
 
@@ -191,9 +226,7 @@ def expand_superclasses(triples: DataFrame, subclass_pred: str) -> DataFrame:
     )
 
 
-def detect_broader_cycles(
-    triples: DataFrame, broader_pred: str, max_rounds: int = 50
-) -> DataFrame:
+def detect_broader_cycles(triples: DataFrame, broader_pred: str) -> DataFrame:
     """SKOS broader-cycle detection (reference ``:1684-1715``).
 
     Reference quirk reproduced: the walk follows only the FIRST broader
@@ -208,7 +241,7 @@ def detect_broader_cycles(
         .agg(F.min("obj").alias("obj"))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
     )
-    closure = transitive_closure(first_broader, max_rounds=max_rounds)
+    closure = transitive_closure(first_broader)
     return (
         closure.filter(F.col("src") == F.col("dst"))
         .select(F.col("src").alias("concept"))
@@ -217,9 +250,7 @@ def detect_broader_cycles(
     )
 
 
-def incremental_components(
-    cc_map: DataFrame, delta_edges: DataFrame, max_rounds: int = 50
-) -> DataFrame:
+def incremental_components(cc_map: DataFrame, delta_edges: DataFrame) -> DataFrame:
     """Maintain a connected-components labelling under NEW edges
     without recomputing over the full edge set — the O(delta) nightly
     refresh of the sameAs canonicalization map (a crawl's incremental
@@ -247,7 +278,7 @@ def incremental_components(
             F.col(delta_edges.columns[1]).alias("dst"),
         )
     ).unionByName(singletons)
-    return connected_components(u, max_rounds=max_rounds)
+    return connected_components(u)
 
 
 def resolve_pointers(links: DataFrame, max_rounds: int = 6) -> DataFrame:
@@ -315,7 +346,6 @@ def incremental_closure(
     delta_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """Maintain a transitive closure under NEW edges without re-closing
     the full graph — the semi-naive refresh for subClassOf /
@@ -366,16 +396,7 @@ def incremental_closure(
         .localCheckpoint(eager=True)
     )
     total = C.unionByName(b_steps).distinct().localCheckpoint(eager=True)
-    n = total.count()
-    for _ in range(max_rounds):
-        grown = (
-            total.unionByName(compose(total, b_steps))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n2 = grown.count()
-        total = grown
-        if n2 == n:
-            break
-        n = n2
-    return total.orderBy(src, dst)
+    total, _ = converge(
+        total, lambda t: union_new(t, compose(t, b_steps), [src, dst])
+    )
+    return total.select(src, dst).orderBy(src, dst)

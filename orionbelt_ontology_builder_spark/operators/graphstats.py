@@ -33,11 +33,16 @@ table:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import checkpoint_observed, connected_components, converge, union_new
 
 DAMPING = 0.85
 PR_ITERS = 5
+#: :func:`scc` caps: peels of the live graph, and rounds of each flood
+SCC_MAX_PEELS = 8
+SCC_MAX_FLOOD = 64
 
 
 def _nodes(edges: DataFrame) -> DataFrame:
@@ -307,9 +312,9 @@ def bfs_hops(
     visited set), so total work is O(edges-touched), not
     O(paths) — the transitive-closure formulation enumerates every
     path and detonates on cyclic or diamond-heavy graphs.  Per round:
-    one join + one anti-join + an eager checkpoint whose count doubles
-    as the convergence probe (empty frontier = early exit before
-    max_hops), mirroring the fixpoint-module convention."""
+    one join + one anti-join + an eager checkpoint that also counts the
+    frontier (``fixpoint.checkpoint_observed``; empty frontier = early
+    exit before max_hops)."""
     if direction == "reverse":
         edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     elif direction == "undirected":
@@ -327,15 +332,15 @@ def bfs_hops(
     )
     frontier = dist.select("node")
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, m = checkpoint_observed(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(h)),
+            n=F.count(F.lit(1)),
         )
-        if nxt.count() == 0:
+        if not m["n"]:
             break
         dist = dist.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select("node")
@@ -1092,8 +1097,6 @@ def component_size_dist(edges: DataFrame) -> DataFrame:
     pairs.  Composition: large/small-star CC (O(log n) rounds) ->
     groupBy(component).count -> groupBy(count).count — every stage a
     key-partitioned aggregation."""
-    from .fixpoint import connected_components
-
     cc = connected_components(edges)
     sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
     return (
@@ -1227,9 +1230,7 @@ SELECT node, rank FROM {prev} ORDER BY node
 """
 
 
-def scc(
-    edges: DataFrame, max_outer: int = 8, max_inner: int = 64
-) -> DataFrame:
+def scc(edges: DataFrame) -> DataFrame:
     """(node, scc_id) — strongly connected components of the directed
     graph; ``scc_id`` is the maximum member id (any total order on the
     node type works: bigint ids or lexicographic URIs).  The directed
@@ -1259,65 +1260,60 @@ def scc(
     rounds with ``localCheckpoint`` plan-cut per round; no window over
     an unbounded group, no driver materialization of nodes or edges —
     the per-round shape is the same as ``pagerank``'s and survives a
-    100x edge scale-up.  Convergence caps raise instead of silently
+    100x edge scale-up.  Every round reads its convergence from its own
+    checkpoint job (``fixpoint.converge``).  The caps
+    (``SCC_MAX_PEELS``, ``SCC_MAX_FLOOD``) raise instead of silently
     truncating (the capped-fixpoint convention; tests assert the
     fixtures converge inside the caps)."""
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    live_n = _nodes(e).localCheckpoint(eager=True)
+    live_n, live = checkpoint_observed(_nodes(e), n=F.count(F.lit(1)))
     live_e = e
     done: list[DataFrame] = []
-    for _outer in range(max_outer):
-        if live_n.isEmpty():
+
+    def color_flood(colors: DataFrame) -> tuple[DataFrame, Column]:
+        # each node's old colour rides along (every flooded node is
+        # live, so it has one), making the changed flag a column
+        cand = live_e.join(
+            colors.select(F.col("node").alias("src"), "color"), "src"
+        ).select(F.col("dst").alias("node"), "color", F.lit(None).alias("old"))
+        new = (
+            colors.select("node", "color", F.col("color").alias("old"))
+            .unionByName(cand)
+            .groupBy("node")
+            .agg(F.max("color").alias("color"), F.max("old").alias("old"))
+        )
+        return new, F.col("color") != F.col("old")
+
+    def backward_flood(member: DataFrame) -> tuple[DataFrame, Column]:
+        preds = (
+            live_e.join(
+                member.select(F.col("node").alias("dst"), "color"), "dst"
+            )
+            .select(F.col("src").alias("node"), "color")
+            .join(colors, ["node", "color"], "left_semi")
+        )
+        return union_new(member, preds, ["node", "color"])
+
+    for _outer in range(SCC_MAX_PEELS):
+        if not live["n"]:
             break
-        colors = live_n.select("node", F.col("node").alias("color"))
-        for _inner in range(max_inner):
-            cand = live_e.join(
-                colors.select(F.col("node").alias("src"), "color"), "src"
-            ).select(F.col("dst").alias("node"), "color")
-            new = (
-                colors.unionByName(cand)
-                .groupBy("node")
-                .agg(F.max("color").alias("color"))
-                .localCheckpoint(eager=True)
-            )
-            stable = (
-                new.join(
-                    colors.withColumnRenamed("color", "old"), "node"
-                )
-                .filter(F.col("color") != F.col("old"))
-                .isEmpty()
-            )
-            colors = new
-            if stable:
-                break
-        else:
-            raise RuntimeError("scc: color flood exceeded max_inner")
-        member = colors.filter(
-            F.col("node") == F.col("color")
-        ).localCheckpoint(eager=True)
-        for _inner in range(max_inner):
-            preds = (
-                live_e.join(
-                    member.select(F.col("node").alias("dst"), "color"),
-                    "dst",
-                )
-                .select(F.col("src").alias("node"), "color")
-                .join(colors, ["node", "color"], "left_semi")
-            )
-            new_m = (
-                member.unionByName(preds)
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            grew = new_m.count() > member.count()
-            member = new_m
-            if not grew:
-                break
-        else:
-            raise RuntimeError("scc: backward flood exceeded max_inner")
+        colors, ok = converge(
+            live_n.select("node", F.col("node").alias("color")),
+            color_flood,
+            SCC_MAX_FLOOD,
+        )
+        if not ok:
+            raise RuntimeError("scc: color flood exceeded SCC_MAX_FLOOD")
+        member, ok = converge(
+            colors.filter(F.col("node") == F.col("color")).select("node", "color"),
+            backward_flood,
+            SCC_MAX_FLOOD,
+        )
+        if not ok:
+            raise RuntimeError("scc: backward flood exceeded SCC_MAX_FLOOD")
         done.append(member.select("node", F.col("color").alias("scc_id")))
-        live_n = live_n.join(member, "node", "left_anti").localCheckpoint(
-            eager=True
+        live_n, live = checkpoint_observed(
+            live_n.join(member, "node", "left_anti"), n=F.count(F.lit(1))
         )
         live_e = (
             live_e.join(
@@ -1328,9 +1324,8 @@ def scc(
             )
             .localCheckpoint(eager=True)
         )
-    else:
-        if not live_n.isEmpty():
-            raise RuntimeError("scc: peel exceeded max_outer")
+    if live["n"]:
+        raise RuntimeError("scc: peel exceeded SCC_MAX_PEELS")
     if not done:
         return e.select(
             F.col("src").alias("node"), F.col("src").alias("scc_id")
@@ -1675,15 +1670,15 @@ def harmonic_centrality(
     )
     frontier = dist.select("seed", "node")
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, m = checkpoint_observed(
             frontier.join(e, frontier["node"] == e["src"])
             .select("seed", F.col("dst").alias("node"))
             .distinct()
             .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint(eager=True)
+            .withColumn("hops", F.lit(h)),
+            n=F.count(F.lit(1)),
         )
-        if nxt.isEmpty():
+        if not m["n"]:
             break
         dist = dist.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt.select("seed", "node")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model import OWL, RDF
+from .fixpoint import checkpoint_observed
 
 
 #: estimated `rest`-slice bytes above which it stops being broadcast —
@@ -173,30 +174,28 @@ def unroll_lists(
             eager=False
         )
     # walk: start at every cell, then follow `rest` pointers, tagging
-    # position.  Each round's frontier takes a LAZY localCheckpoint:
-    # round k then builds on round k-1's materialized blocks instead
-    # of a k-deep join lineage, so the whole walk evaluates each hop
-    # ONCE (the naive chain re-executes O(L^2) join stages across the
-    # union branches and the per-round probes — measured ~6 s to
+    # position.  Each round's frontier is checkpointed with its row
+    # count observed in the same job: round k then builds on round
+    # k-1's materialized blocks instead of a k-deep join lineage, so the
+    # whole walk evaluates each hop ONCE (the naive chain re-executes
+    # O(L^2) join stages across the union branches — measured ~6 s to
     # decode a 2-element chain at fixture scale; this shape is ~1 s).
-    # The per-round isEmpty() probe then reads cached blocks + one new
-    # hop, keeping early exit cheap.
     frontier = firsts.select(
         F.col("cell").alias("head"), F.col("cell"), F.lit(0).alias("pos")
     ).coalesce(4)
     out = frontier
     for _ in range(max_len - 1):
-        frontier = (
+        frontier, m = checkpoint_observed(
             frontier.join(rests_j, "cell")
             .filter(F.col("next") != RDF.nil)
             .select(
                 "head",
                 F.col("next").alias("cell"),
                 (F.col("pos") + 1).alias("pos"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            n=F.count(F.lit(1)),
         )
-        if frontier.isEmpty():
+        if not m["n"]:
             break
         out = out.unionByName(frontier)
     walked = out.join(firsts, "cell").select("head", "pos", "item")

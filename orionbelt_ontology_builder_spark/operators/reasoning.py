@@ -35,8 +35,8 @@ prp-eqp1/2, eq-rep-s/p/o substitution, and
 
 Every join rule above is declared once, in the rule table ``_RULES``:
 the schema gate(s) it joins against, whether it is owl-rl only, and its
-builder (one of a few join shapes).  ``_schema_probe`` derives its gate
-aggregation from that table and ``_round`` applies each rule whose
+builder (one of a few join shapes).  ``_grow`` derives its gate
+observation from that table and ``_round`` applies each rule whose
 gates are non-empty.  The sameAs rules (eq-sym/eq-trans, eq-rep-*) and
 property chains (prp-spo2) run between rounds in ``apply_reasoning``.
 
@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..model import OWL, RDF, RDFS, TRIPLE_COLS
+from .fixpoint import checkpoint_observed, connected_components
 
 
 def _as_triples(df: DataFrame, kind: str = "uri") -> DataFrame:
@@ -321,33 +322,9 @@ _GATES = tuple(
 )
 
 
-def _schema_probe(triples: DataFrame) -> tuple[int, dict]:
-    """ONE tiny aggregation returning (row_count, {gate: non-empty}).
-
-    The gates (``_GATES``, from the rule table) gate rule joins: each
-    join is built only when its (broadcast-side) schema slice is
-    non-empty.  At fixture scale this halves the per-round DAG; at
-    corpus scale it skips instance-wide joins that provably produce
-    nothing.  Sound inside the fixpoint: a rule's schema slice can only
-    become non-empty in a round that added triples, and the probe is
-    recomputed every round.
-
-    The count rides in the same aggregation because the fixpoint loop
-    uses it as its convergence witness (the known set grows
-    monotonically, so an unchanged count means no new triples) — one
-    collect per round covers BOTH the convergence probe and the gate
-    re-probe, where the earlier shape paid separate exceptAll +
-    isEmpty + flags jobs."""
-    row = triples.select(
-        F.count(F.lit(1)),
-        *[F.max(_gate_cond(g).cast("int")) for g in _GATES],
-    ).collect()[0]
-    return int(row[0]), {g: bool(on) for g, on in zip(_GATES, row[1:])}
-
-
 def _round(triples: DataFrame, with_equivalence: bool, flags: dict) -> DataFrame:
     """One application of every rule in ``_RULES`` whose gates are all
-    non-empty in ``flags`` (``_schema_probe``); returns candidate
+    non-empty in ``flags`` (``_grow``); returns candidate
     triples (may include already-known ones — caller subtracts).
 
     ``with_equivalence`` adds the owl-rl only rules (cax-eqc1/2,
@@ -438,8 +415,6 @@ def sameas_components(triples: DataFrame) -> DataFrame:
     path for equality reasoning.  One CC pass is O(E log n) with
     pointer-jumping instead of the O(k^2)-per-clique pairwise closure
     (a hot web entity with millions of aliases detonates the latter)."""
-    from .fixpoint import connected_components
-
     edges = triples.filter(F.col("pred") == OWL.sameAs).select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
@@ -480,14 +455,19 @@ def eq_rep(triples: DataFrame, sib: DataFrame) -> DataFrame:
 
 
 def _grow(*parts: DataFrame) -> tuple[DataFrame, int, dict]:
-    """The known set grown by ``parts``: union, dedup and checkpoint it,
-    then ``_schema_probe`` it — (grown, row_count, gates), two jobs."""
-    grown = (
-        reduce(DataFrame.unionByName, parts)
-        .dropDuplicates(TRIPLE_COLS)
-        .localCheckpoint(eager=True)
+    """The known set grown by ``parts``: union, dedup and checkpoint it;
+    returns (grown, row_count, {gate: non-empty}), both observed on the
+    checkpoint job itself.  A rule join is built only when its
+    broadcast-side schema slice (its gate in ``_GATES``) is non-empty,
+    which skips joins that provably produce nothing.  Sound inside the
+    fixpoint: a slice can only fill in a round that added triples, and
+    every grow re-reads the gates."""
+    grown, m = checkpoint_observed(
+        reduce(DataFrame.unionByName, parts).dropDuplicates(TRIPLE_COLS),
+        n=F.count(F.lit(1)),
+        **{f"g{i}": F.max(_gate_cond(g).cast("int")) for i, g in enumerate(_GATES)},
     )
-    return (grown, *_schema_probe(grown))
+    return grown, m["n"], {g: bool(m[f"g{i}"]) for i, g in enumerate(_GATES)}
 
 
 _PROFILES = ("rdfs", "owl-rl", "owl-rl-ext")
@@ -512,14 +492,12 @@ def apply_reasoning(
     outer loop re-enters the rules only if equality produced new facts
     (it can: a substituted triple may re-trigger e.g. rdfs2).
 
-    Per-round driver cost is exactly TWO jobs (``_grow``) — the
-    checkpoint of the grown set and one combined count+gates
-    aggregation (``_schema_probe``).  The known set grows monotonically
-    under union, so an unchanged count is a complete convergence
-    witness; this replaces the earlier exceptAll-the-candidates +
-    isEmpty + separate flag probe (4 jobs/round).  The fixpoint loop is
-    the only serial driver-side cost in the engine, so per-round
-    latency is what Amdahl charges against scaled-up clusters.
+    Each round is one driver action, the checkpoint of the grown set
+    (``_grow``), whose job also observes the set's row count and the
+    rule gates.  The known set grows monotonically under union, so an
+    unchanged count is a complete convergence witness.  The fixpoint
+    loop is the only serial driver-side cost in the engine, so
+    per-round latency is what Amdahl charges against scaled-up clusters.
     """
     if profile not in _PROFILES:
         raise ValueError(f"unknown profile {profile!r}; expected one of {_PROFILES}")
@@ -542,9 +520,9 @@ def apply_reasoning(
         # so new chain facts re-enter the rule loop via the outer
         # iteration instead of special-casing the inner one
         if with_eq and flags[_CHAIN]:
-            new_chain = apply_property_chains(current)
-            if not new_chain.isEmpty():
-                current, n, flags = _grow(current, new_chain)
+            current, n2, flags = _grow(current, apply_property_chains(current))
+            if n2 != n:
+                n = n2
                 continue
         # equality reasoning: one CC pass per outer round (skipped
         # entirely when the graph asserts no sameAs — the common case
@@ -561,7 +539,7 @@ def apply_reasoning(
         # under owl-rl: eq-rep would derive the reflexive pairs anyway on
         # the NEXT outer round; emitting them with the closure reaches
         # the same fixpoint one outer round (and one CC pass) earlier.
-        cc = sameas_components(current).localCheckpoint(eager=True)
+        cc = sameas_components(current)  # already a checkpoint
         sib = (
             cc.alias("a")
             .join(cc.alias("b"), F.col("a.component") == F.col("b.component"))

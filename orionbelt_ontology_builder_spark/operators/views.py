@@ -1066,7 +1066,10 @@ def class_tree(triples: DataFrame, max_depth: int = 16) -> DataFrame:
     children ordered by name via the materialized root->node path.
 
     Iterative depth-assigning join (each round one broadcast-size join:
-    class hierarchies are schema-sized, not data-sized)."""
+    class hierarchies are schema-sized, not data-sized), each level
+    checkpointed with its row count observed in the same job."""
+    from .fixpoint import checkpoint_observed
+
     classes = (
         type_slice(triples, OWL.Class)
         .filter(~F.col("subj").startswith("_:"))
@@ -1095,7 +1098,7 @@ def class_tree(triples: DataFrame, max_depth: int = 16) -> DataFrame:
     )
     out = frontier
     for _ in range(max_depth):
-        frontier = (
+        frontier, m = checkpoint_observed(
             frontier.join(edges, frontier["node"] == edges["parent"])
             .filter(
                 F.instr(
@@ -1113,9 +1116,10 @@ def class_tree(triples: DataFrame, max_depth: int = 16) -> DataFrame:
                 F.concat(
                     F.col("upath"), F.col("child"), F.lit(sep)
                 ).alias("upath"),
-            )
+            ),
+            n=F.count(F.lit(1)),
         )
-        if frontier.isEmpty():
+        if not m["n"]:
             break
         out = out.unionByName(frontier)
     return out.select(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from orionbelt_ontology_builder_spark.fixtures import BASE
 from orionbelt_ontology_builder_spark.model import SKOS, TRIPLES_SCHEMA, t_uri
@@ -257,3 +258,87 @@ def test_incremental_closure_empty_delta_is_identity(spark):
     closed = fixpoint.transitive_closure(base)
     inc = fixpoint.incremental_closure(closed, _edges(spark, []).limit(0))
     assert _pairs(inc) == _pairs(closed)
+
+
+# ------------------------------------------------------------------ #
+# the checkpoint-and-observe loop driver
+# ------------------------------------------------------------------ #
+
+
+def _counting_checkpoints(monkeypatch):
+    calls = []
+    real = fixpoint.checkpoint_observed
+
+    def counted(df, **metrics):
+        calls.append(1)
+        return real(df, **metrics)
+
+    monkeypatch.setattr(fixpoint, "checkpoint_observed", counted)
+    return calls
+
+
+def _doubling_step(closure):
+    grown = (
+        closure.alias("a")
+        .join(closure.alias("b"), F.col("a.dst") == F.col("b.src"))
+        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+    )
+    return fixpoint.union_new(closure, grown, ["src", "dst"])
+
+
+def test_converge_matches_hand_written_loop(spark, monkeypatch):
+    path = _edges(spark, [(f"n{i}", f"n{i + 1}") for i in range(4)])
+    calls = _counting_checkpoints(monkeypatch)
+    got, converged = fixpoint.converge(
+        path.localCheckpoint(eager=True), _doubling_step
+    )
+    assert converged
+    # hops 2, then 3-4, then a round that adds nothing
+    assert len(calls) == 3
+    # the probe loop the driver replaces: checkpoint, then count
+    want = path.localCheckpoint(eager=True)
+    n = want.count()
+    while True:
+        want = (
+            want.unionByName(_doubling_step(want)[0].select("src", "dst"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        if want.count() == n:
+            break
+        n = want.count()
+    assert _pairs(got.select("src", "dst")) == _pairs(want)
+
+
+def test_converge_stops_at_max_rounds_unconverged(spark, monkeypatch):
+    calls = _counting_checkpoints(monkeypatch)
+
+    def grow(df):
+        return df.select(F.col("v") + 1).toDF("v"), F.lit(True)
+
+    out, converged = fixpoint.converge(
+        spark.range(4).select(F.lit(0).alias("v")), grow, max_rounds=3
+    )
+    assert not converged
+    assert len(calls) == 3
+    assert {r["v"] for r in out.collect()} == {3}
+
+
+def test_converge_empty_frame_is_converged(spark):
+    out, converged = fixpoint.converge(
+        spark.range(0).toDF("v"), lambda df: (df, F.lit(True))
+    )
+    assert converged
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("cap", ["SCC_MAX_PEELS", "SCC_MAX_FLOOD"])
+def test_scc_cap_raises(spark, monkeypatch, cap):
+    from orionbelt_ontology_builder_spark.operators import graphstats
+
+    # z feeds the a<->b cycle: z's colour floods it, so the cycle peels
+    # in a second round, after colour flooding that takes > 1 round
+    edges = _edges(spark, [("z", "a"), ("a", "b"), ("b", "a")])
+    monkeypatch.setattr(graphstats, cap, 1)
+    with pytest.raises(RuntimeError, match=cap):
+        graphstats.scc(edges)
