@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.setops import sides
 from ..pipeline.linking import bucket_pairs
 from .textstats import norm_col, norm_sql, tokens_col, tokens_sql
 
@@ -1343,15 +1344,11 @@ def blocking_metrics(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
     )
-    flagged = cand.withColumn("c", F.lit(1)).join(
-        truth.withColumn("t", F.lit(1)), ["doc_a", "doc_b"], "full_outer"
-    )
-    counts = flagged.agg(
-        F.count("c").alias("candidate_pairs"),
-        F.count("t").alias("truth_pairs"),
-        F.count(F.when(F.col("c").isNotNull() & F.col("t").isNotNull(), 1)).alias(
-            "true_candidates"
-        ),
+    in_c, in_t = F.col("in_a"), F.col("in_b")
+    counts = sides(cand, truth, ["doc_a", "doc_b"]).agg(
+        F.count(F.when(in_c, 1)).alias("candidate_pairs"),
+        F.count(F.when(in_t, 1)).alias("truth_pairs"),
+        F.count(F.when(in_c & in_t, 1)).alias("true_candidates"),
     )
     n_docs = sig.agg(F.count(F.lit(1)).alias("n_docs"))
     return (

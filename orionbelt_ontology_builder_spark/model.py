@@ -13,8 +13,8 @@ Reference semantics reproduced here (citations into /root/reference):
 
 Spark mapping: one 6-column all-string DataFrame.  The
 (obj, obj_kind, obj_lang, obj_dt) quadruple is the lossless term encoding
-that makes ``exceptAll`` / ``intersect`` / ``distinct`` reproduce rdflib
-set semantics exactly.  All-string keeps parquet dictionary encoding and
+that makes ``distinct`` and the ``setops.sides`` membership fold (both
+group NULL slots as equal) reproduce rdflib set semantics exactly.  All-string keeps parquet dictionary encoding and
 min/max pruning effective at scale; there is no nested type in the hot path.
 """
 

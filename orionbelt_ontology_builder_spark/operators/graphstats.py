@@ -295,6 +295,19 @@ SELECT
 """
 
 
+def _directed(edges: DataFrame, direction: str) -> DataFrame:
+    """(src, dst) edges to walk: as given (``forward``), flipped
+    (``reverse``) or both ways (``undirected``)."""
+    flipped = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    if direction == "forward":
+        return edges
+    if direction == "reverse":
+        return flipped
+    if direction == "undirected":
+        return edges.unionByName(flipped)
+    raise ValueError(f"unknown direction {direction!r}")
+
+
 def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
@@ -314,15 +327,9 @@ def bfs_hops(
     path and detonates on cyclic or diamond-heavy graphs.  Per round:
     one join + one anti-join + an eager checkpoint that also counts the
     frontier (``fixpoint.checkpoint_observed``; empty frontier = early
-    exit before max_hops)."""
-    if direction == "reverse":
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    elif direction == "undirected":
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    elif direction != "forward":
-        raise ValueError(f"unknown direction {direction!r}")
+    exit before max_hops).  The visited set is the union of those
+    checkpoints, so it needs no checkpoint of its own."""
+    edges = _directed(edges, direction)
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     dist = (
         seeds.select("node")
@@ -342,7 +349,7 @@ def bfs_hops(
         )
         if not m["n"]:
             break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = dist.unionByName(nxt)
         frontier = nxt.select("node")
     return dist
 
@@ -1653,14 +1660,7 @@ def harmonic_centrality(
     corpus scale, so state stays |seeds| x |reached|."""
     import math
 
-    if direction == "reverse":
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    elif direction == "undirected":
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    elif direction != "forward":
-        raise ValueError(f"unknown direction {direction!r}")
+    edges = _directed(edges, direction)
     e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     dist = (
         seeds.select(F.col("node").alias("seed"))
@@ -1680,7 +1680,7 @@ def harmonic_centrality(
         )
         if not m["n"]:
             break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = dist.unionByName(nxt)
         frontier = nxt.select("seed", "node")
     lcm = math.lcm(*range(1, max_hops + 1))
     return (
@@ -2343,14 +2343,7 @@ def weighted_sssp(
     O(edges) per round, never path enumeration; at cluster scale the
     edge table is pre-partitioned by ``src`` so the relaxation join
     reuses one exchange."""
-    if direction == "reverse":
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    elif direction == "undirected":
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    elif direction != "forward":
-        raise ValueError(f"unknown direction {direction!r}")
+    edges = _directed(edges, direction)
     w = (
         F.conv(
             F.substring(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .setops import sides
+
 __all__ = [
     "json_props_profile",
     "json_props_profile_sql",
@@ -1364,27 +1366,18 @@ def recall_estimate(ext_a: DataFrame, ext_b: DataFrame) -> DataFrame:
     (Razniewski et al., public literature).  Zero-overlap predicates
     get NULL estimates (the model needs a recapture).
 
-    Plan: two distinct projections, one full-outer membership join on
-    the fact key, one conditional agg per predicate — the
-    diff_summary plan shape, map-side combinable."""
-    a = ext_a.select("subj", "pred", "obj").distinct().withColumn(
-        "in_a", F.lit(1)
-    )
-    b = ext_b.select("subj", "pred", "obj").distinct().withColumn(
-        "in_b", F.lit(1)
-    )
-    j = a.join(b, ["subj", "pred", "obj"], "full_outer")
-    n_a = F.sum(F.when(F.col("in_a").isNotNull(), 1).otherwise(0))
-    n_b = F.sum(F.when(F.col("in_b").isNotNull(), 1).otherwise(0))
-    n_both = F.sum(
-        F.when(F.col("in_a").isNotNull() & F.col("in_b").isNotNull(), 1)
-        .otherwise(0)
-    )
-    agg = j.groupBy("pred").agg(
-        n_a.alias("n_a"),
-        n_b.alias("n_b"),
-        n_both.alias("n_both"),
-        F.count(F.lit(1)).alias("n_union"),
+    Plan: one :func:`setops.sides` fold on the fact key (one exchange,
+    map-side combine), then one conditional agg per predicate."""
+    in_a, in_b = F.col("in_a"), F.col("in_b")
+    agg = (
+        sides(ext_a, ext_b, ["subj", "pred", "obj"])
+        .groupBy("pred")
+        .agg(
+            F.count(F.when(in_a, 1)).alias("n_a"),
+            F.count(F.when(in_b, 1)).alias("n_b"),
+            F.count(F.when(in_a & in_b, 1)).alias("n_both"),
+            F.count(F.lit(1)).alias("n_union"),
+        )
     )
     est = F.when(
         F.col("n_both") > 0,

@@ -1,11 +1,13 @@
 """Set operations: diff / merge / conflict detection (SURVEY.md §2.7).
 
 The reference implements these with Python ``set`` algebra over fully
-materialized graphs (``ontology_manager.py:2423-2424``, ``:2467``); here
-they are ``exceptAll`` / ``intersect`` / ``unionByName().distinct()`` over
-the 6-column term encoding, so equality includes lang/datatype exactly as
-rdflib does.  All distributed — Spark's hash-based set ops do partial
-aggregation map-side and spill; no driver materialization.
+materialized graphs (``ontology_manager.py:2423-2424``, ``:2467``).  Here
+every two-relation comparison goes through one membership fold,
+:func:`sides`: the distinct key rows of both inputs with an in-a / in-b
+flag each, so the diffs are set-valued even when an input repeats a
+row.  Keyed on the 6-column term encoding, equality includes
+lang/datatype exactly as rdflib does.  All distributed: the fold does
+partial aggregation map-side and spills; no driver materialization.
 """
 
 from __future__ import annotations
@@ -77,54 +79,70 @@ def detect_conflicts(current: DataFrame, incoming: DataFrame) -> DataFrame:
     )
 
 
+def sides(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+    """The distinct ``keys`` rows of ``a`` ∪ ``b`` with boolean ``in_a`` /
+    ``in_b`` columns: the membership fold behind every two-relation
+    comparison (diffs, churn, breaking changes, P/R counters).
+
+    Plan: one ``unionByName`` of the two tagged projections and one
+    ``groupBy(keys)`` with ``max`` per flag, so one exchange with a
+    map-side partial aggregate.  A row repeated on either side folds to
+    one key row, so callers get set semantics by construction, and
+    ``groupBy`` treats NULLs as equal, so NULL ``obj_lang`` / ``obj_dt``
+    slots match as rdflib terms do."""
+
+    def tag(df: DataFrame, in_a: bool) -> DataFrame:
+        return df.select(
+            *keys, F.lit(in_a).alias("in_a"), F.lit(not in_a).alias("in_b")
+        )
+
+    return (
+        tag(a, True)
+        .unionByName(tag(b, False))
+        .groupBy(*keys)
+        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
+    )
+
+
+def _membership() -> tuple:
+    """(added, removed, both, bnode) predicates over a :func:`sides`
+    fold of (old, new).  The bnode split is on the SUBJECT only
+    (reference filters t[0] BNode, :2427-2430): a named subject
+    referencing a bnode (e.g. subClassOf a restriction node) IS
+    surfaced and counted as a named change."""
+    in_a, in_b = F.col("in_a"), F.col("in_b")
+    return in_b & ~in_a, in_a & ~in_b, in_a & in_b, F.col("subj").startswith("_:")
+
+
 def diff_graphs(current: DataFrame, other: DataFrame) -> dict[str, DataFrame]:
     """Set diff (reference ``compare_graphs``, ``:2412-2486``):
     ``added = other - current``, ``removed = current - other``,
     ``unchanged = intersection``; bnode-subject triples split out
     (counted, not surfaced — ``:2427-2430``, test ``test_diff.py:74``).
+    Every frame filters the same :func:`sides` fold, so a query that
+    reads several of them reuses its one exchange.
     """
-    added = other.exceptAll(current)
-    removed = current.exceptAll(other)
-    unchanged = current.intersect(other)
-    # bnode split is on the SUBJECT only (reference filters t[0] BNode,
-    # :2427-2430): a named subject referencing a bnode (e.g. subClassOf
-    # a restriction node) IS surfaced and counted as a named change
-    is_b = F.col("subj").startswith("_:")
+    f = sides(current, other, TRIPLE_COLS)
+    added, removed, both, is_b = _membership()
+
+    def part(cond) -> DataFrame:
+        return f.filter(cond).select(*TRIPLE_COLS)
+
     return {
-        "added": added.filter(~is_b),
-        "removed": removed.filter(~is_b),
-        "added_bnode": added.filter(is_b),
-        "removed_bnode": removed.filter(is_b),
-        "unchanged": unchanged,
+        "added": part(added & ~is_b),
+        "removed": part(removed & ~is_b),
+        "added_bnode": part(added & is_b),
+        "removed_bnode": part(removed & is_b),
+        "unchanged": part(both),
     }
 
 
 def diff_summary(current: DataFrame, other: DataFrame) -> DataFrame:
     """One-row diff stats (reference ``:2467-2482``): added/removed/
-    unchanged counts with the bnode split.
-
-    ONE null-safe full-outer join + conditional aggregate — not three
-    separate set-ops (exceptAll x2 + intersect would shuffle both
-    inputs three times for counts we can take in a single pass).
-    Equivalent because triples are kept set-distinct engine-wide.
-    """
-    from ..model import TRIPLE_COLS
-
-    cur = current.alias("c").withColumn("in_c", F.lit(1))
-    oth = other.alias("o").withColumn("in_o", F.lit(1))
-    # null-safe equality: obj_lang / obj_dt are nullable and NULL must
-    # match NULL (plain join-on-columns would misclassify those rows)
-    cond = None
-    for col in TRIPLE_COLS:
-        piece = F.col(f"c.{col}").eqNullSafe(F.col(f"o.{col}"))
-        cond = piece if cond is None else cond & piece
-    j = cur.join(oth, cond, "full_outer")
-    subj = F.coalesce(F.col("c.subj"), F.col("o.subj"))
-    is_b = subj.startswith("_:")  # subject-only split, as in diff_graphs
-    added = F.col("in_o").isNotNull() & F.col("in_c").isNull()
-    removed = F.col("in_c").isNotNull() & F.col("in_o").isNull()
-    both = F.col("in_c").isNotNull() & F.col("in_o").isNotNull()
-    return j.agg(
+    unchanged counts with the bnode split — conditional counts over
+    one :func:`sides` fold, so one hash exchange."""
+    added, removed, both, is_b = _membership()
+    return sides(current, other, TRIPLE_COLS).agg(
         F.count(F.when(added & ~is_b, 1)).alias("added"),
         F.count(F.when(removed & ~is_b, 1)).alias("removed"),
         F.count(F.when(added & is_b, 1)).alias("added_bnode"),
@@ -135,25 +153,25 @@ def diff_summary(current: DataFrame, other: DataFrame) -> DataFrame:
 
 def classify_resources(current: DataFrame, other: DataFrame) -> DataFrame:
     """Per-subject change classification added/removed/modified
-    (reference ``:2494-2520``): full-outer join of the added/removed
-    subject sets."""
-    d = diff_graphs(current, other)
-    a = d["added"].select("subj").distinct().withColumn("has_added", F.lit(True))
-    r = d["removed"].select("subj").distinct().withColumn("has_removed", F.lit(True))
-    return (
-        a.join(r, "subj", "full_outer")
-        .select(
-            F.col("subj").alias("resource"),
-            F.when(
-                F.col("has_added").isNotNull() & F.col("has_removed").isNotNull(),
-                "modified",
-            )
-            .when(F.col("has_added").isNotNull(), "added")
-            .otherwise("removed")
-            .alias("change"),
+    (reference ``:2494-2520``): the named-subject rows of the
+    :func:`sides` fold that are on one side only, rolled up per
+    subject."""
+    added, removed, _, is_b = _membership()
+    per = (
+        sides(current, other, TRIPLE_COLS)
+        .filter((added | removed) & ~is_b)
+        .groupBy("subj")
+        .agg(
+            F.max("in_b").alias("has_added"), F.max("in_a").alias("has_removed")
         )
-        .orderBy("resource")
     )
+    return per.select(
+        F.col("subj").alias("resource"),
+        F.when(F.col("has_added") & F.col("has_removed"), "modified")
+        .when(F.col("has_added"), "added")
+        .otherwise("removed")
+        .alias("change"),
+    ).orderBy("resource")
 
 
 def detect_prefix_conflicts(cur_prefixes: DataFrame, inc_prefixes: DataFrame) -> DataFrame:
@@ -589,33 +607,18 @@ def triple_churn(a: DataFrame, b: DataFrame) -> DataFrame:
     crawl-over-crawl KG health monitor: a predicate whose churn spikes
     signals an extractor regression before any downstream eval does.
 
-    Scale shape: ONE shuffle — both (distinct) triple sets union with
-    a side bit, groupBy the triple key folds the bits (map-side
-    combine), and the per-predicate rollup runs on the vocab-keyed
-    output of that same exchange.  No exceptAll/intersect passes (each
-    would be its own shuffle pair)."""
-    cols = ["subj", "pred", "obj", "obj_kind"]
-    tagged = (
-        a.select(*cols).distinct().withColumn("in_a", F.lit(1))
-        .withColumn("in_b", F.lit(0))
-        .unionByName(
-            b.select(*cols).distinct().withColumn("in_a", F.lit(0))
-            .withColumn("in_b", F.lit(1))
+    Scale shape: one :func:`sides` fold over the 4-column triple key
+    (one exchange, map-side combine), then the per-predicate rollup —
+    two hash exchanges in all."""
+    added, removed, both, _ = _membership()
+    per_pred = (
+        sides(a, b, ["subj", "pred", "obj", "obj_kind"])
+        .groupBy("pred")
+        .agg(
+            F.count(F.when(added, 1)).alias("n_added"),
+            F.count(F.when(removed, 1)).alias("n_removed"),
+            F.count(F.when(both, 1)).alias("n_retained"),
         )
-    )
-    folded = tagged.groupBy(*cols).agg(
-        F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b")
-    )
-    per_pred = folded.groupBy("pred").agg(
-        F.sum(
-            F.when((F.col("in_b") == 1) & (F.col("in_a") == 0), 1).otherwise(0)
-        ).alias("n_added"),
-        F.sum(
-            F.when((F.col("in_a") == 1) & (F.col("in_b") == 0), 1).otherwise(0)
-        ).alias("n_removed"),
-        F.sum(
-            F.when((F.col("in_a") == 1) & (F.col("in_b") == 1), 1).otherwise(0)
-        ).alias("n_retained"),
     )
     old_size = F.col("n_removed") + F.col("n_retained")
     return per_pred.select(
@@ -688,20 +691,20 @@ def breaking_changes(a: DataFrame, b: DataFrame) -> DataFrame:
     * patch: label/comment churn
     * info: anything else
 
-    Scale shape: two distributed ``exceptAll`` passes (the diff), a
-    broadcast membership probe against the (vocabulary-sized) set of
-    surviving subjects, and a CASE classification — no driver
-    materialization."""
-    cols = ["subj", "pred", "obj", "obj_kind"]
-    pa = a.select(cols).distinct()
-    pb = b.select(cols).distinct()
-    removed = pa.exceptAll(pb).withColumn("dirn", F.lit("removed"))
-    added = pb.exceptAll(pa).withColumn("dirn", F.lit("added"))
-    both_subj = (
-        pa.select("subj").distinct().intersect(pb.select("subj").distinct())
-    ).withColumnRenamed("subj", "bs")
-    ch = removed.unionByName(added).join(
-        F.broadcast(both_subj), F.col("subj") == F.col("bs"), "left"
+    Scale shape: one :func:`sides` fold over the 4-column triple key,
+    then one per-subject window over it marks the subjects present in
+    both versions; the changed rows (on one side only) get a CASE
+    classification — no join, no driver materialization."""
+    from pyspark.sql import Window
+
+    by_subj = Window.partitionBy("subj")
+    ch = (
+        sides(a, b, ["subj", "pred", "obj", "obj_kind"])
+        .withColumn(
+            "surviving",
+            F.max("in_a").over(by_subj) & F.max("in_b").over(by_subj),
+        )
+        .filter(F.col("in_a") != F.col("in_b"))
     )
     is_decl = (F.col("pred") == RDF.type) & F.col("obj").isin(
         list(_SCHEMA_TYPES)
@@ -710,8 +713,8 @@ def breaking_changes(a: DataFrame, b: DataFrame) -> DataFrame:
     is_sub = F.col("pred") == RDFS.subClassOf
     is_con = F.col("pred").isin([RDFS.domain, RDFS.range])
     is_ann = F.col("pred").isin([RDFS.label, RDFS.comment])
-    surviving = F.col("bs").isNotNull()
-    rem = F.col("dirn") == "removed"
+    surviving = F.col("surviving")
+    rem = F.col("in_a")  # a changed row in the old version was removed
     category = (
         F.when(is_decl & rem & is_cls, "class_removed")
         .when(is_decl & rem, "property_removed")
@@ -751,7 +754,9 @@ def breaking_changes(a: DataFrame, b: DataFrame) -> DataFrame:
             severity.alias("severity"),
             category.alias("category"),
             F.col("subj").alias("resource"),
-            F.concat(F.col("dirn"), F.lit(": "), F.col("obj")).alias("detail"),
+            F.concat(
+                F.when(rem, "removed: ").otherwise("added: "), F.col("obj")
+            ).alias("detail"),
         )
         .orderBy("severity", "category", "resource", "detail")
     )

@@ -23,6 +23,7 @@ from ..model import (
     type_slice,
 )
 from .fixpoint import detect_broader_cycles, expand_superclasses
+from .views import duplicate_labels
 
 _DOMAIN_PREDS = [RDFS.domain, SCHEMA_NS + "domainIncludes", GIST_NS + "domainIncludes"]
 _RANGE_PREDS = [RDFS.range, SCHEMA_NS + "rangeIncludes", GIST_NS + "rangeIncludes"]
@@ -135,21 +136,13 @@ def untyped_individuals(triples: DataFrame) -> DataFrame:
 
 
 def duplicate_label_issues(triples: DataFrame) -> DataFrame:
-    """Labels shared by >1 resource (reference ``:2834-2849``)."""
-    dups = (
-        triples.filter(F.col("pred") == RDFS.label)
-        .groupBy("obj")
-        .agg(
-            F.count_distinct("subj").alias("n"),
-            F.array_sort(F.collect_set("subj")).alias("subjects"),
-        )
-        .filter(F.col("n") > 1)
-    )
-    return dups.select(
+    """Labels shared by >1 resource (reference ``:2834-2849``): one issue
+    row per resource of :func:`views.duplicate_labels`."""
+    return duplicate_labels(triples).select(
         F.lit("warning").alias("severity"),
         F.lit("duplicate_label").alias("issue_type"),
-        F.explode("subjects").alias("subject"),
-        F.concat(F.lit("label '"), F.col("obj"), F.lit("' used by multiple resources")).alias("message"),
+        F.explode("resources").alias("subject"),
+        F.concat(F.lit("label '"), F.col("label"), F.lit("' used by multiple resources")).alias("message"),
     )
 
 

@@ -857,7 +857,10 @@ def infer_namespace(triples: DataFrame) -> DataFrame:
 
 
 def duplicate_labels(triples: DataFrame) -> DataFrame:
-    """Labels shared by >1 resource (reference ``:2834-2849``)."""
+    """Labels shared by >1 resource (reference ``:2834-2849``), in no
+    particular row order: ``validation.validate`` explodes these rows
+    into its issues and sorts once at the end, so a sort here would be a
+    second range exchange and sampling job in every validation."""
     return (
         triples.filter(F.col("pred") == RDFS.label)
         .groupBy(F.col("obj").alias("label"))
@@ -866,7 +869,6 @@ def duplicate_labels(triples: DataFrame) -> DataFrame:
             F.count_distinct("subj").alias("n"),
         )
         .filter(F.col("n") > 1)
-        .orderBy("label")
     )
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.setops import sides
 from .canonicalize import canonical_map, rewrite_edges
 from .extract import extract_raw_triples
 from .linking import verified_same_as
@@ -186,28 +187,25 @@ def precision_recall(
 
     ``truth`` is a (s, p, o) DataFrame (``pages.ground_truth_df`` — the
     scale path) or a Python set (the small-scale test convenience, which
-    is parallelized first).  Counters come from ONE full-outer join +
-    conditional aggregate — only three numbers ever reach the driver, so
-    the gate holds at 2M pages (6.3M distinct truth triples) without a
-    driver-side materialization.
+    is parallelized first).  Counters come from ONE ``setops.sides``
+    membership fold + conditional aggregate — only three numbers ever
+    reach the driver, so the gate holds at 2M pages (6.3M distinct truth
+    triples) without a driver-side materialization.
     """
     norm = edges.select(
         F.lower(F.regexp_replace("subj", "[- ]", "")).alias("s"),
         F.col("pred").alias("p"),
         F.lower(F.regexp_replace("obj", "[- ]", "")).alias("o"),
-    ).distinct()
+    )
     if isinstance(truth, set):
         truth = edges.sparkSession.createDataFrame(
             list(truth), "s string, p string, o string"
         )
-    truth = truth.distinct()
-    j = norm.withColumn("g", F.lit(1)).join(
-        truth.withColumn("t", F.lit(1)), ["s", "p", "o"], "full_outer"
-    )
-    row = j.agg(
-        F.count("g").alias("extracted"),
-        F.count("t").alias("expected"),
-        F.count(F.when(F.col("g").isNotNull() & F.col("t").isNotNull(), 1)).alias("tp"),
+    in_g, in_t = F.col("in_a"), F.col("in_b")
+    row = sides(norm, truth, ["s", "p", "o"]).agg(
+        F.count(F.when(in_g, 1)).alias("extracted"),
+        F.count(F.when(in_t, 1)).alias("expected"),
+        F.count(F.when(in_g & in_t, 1)).alias("tp"),
     ).collect()[0]
     tp, extracted, expected = row["tp"], row["extracted"], row["expected"]
     return {

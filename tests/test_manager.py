@@ -126,6 +126,20 @@ ex:Oak a owl:Class ; ex:growsIn ex:Forest .
     assert "ex" in [r["prefix"] for r in om.get_prefixes().collect()]
 
 
+def test_diff_of_text_stating_a_present_triple_twice(om):
+    """A Turtle text may state a triple twice (rdflib keeps one): the
+    comparison is set-valued, so the repeat is unchanged, not added."""
+    ttl = f"@prefix ex: <{BASE}> .\nex:A ex:p ex:B .\n"
+    om.load_from_string(ttl, "turtle")
+    assert om.triples.count() == 1
+    twice = ttl + "ex:A ex:p ex:B .\n"
+    s = om.compare_to_string(twice).first()
+    assert (s["added"], s["removed"], s["unchanged"]) == (0, 0, 1)
+    prev = om.preview_import(twice)
+    assert prev["added"].count() == 0
+    assert prev["classification"].count() == 0
+
+
 def test_metadata_imports_validate_reasoning(om):
     om.set_ontology_metadata(label="My Ontology", creator="me")
     md = om.get_ontology_metadata().first()

@@ -587,6 +587,28 @@ def test_latest_wins_single_agg_no_window(spark):
     assert "SortMergeJoin" not in p
 
 
+def test_membership_fold_hash_exchanges(spark):
+    """The ``setops.sides`` fold is one hash exchange: diff_summary
+    plans only that one, triple_churn that one (the triple key) and
+    then its per-predicate rollup on ``pred``."""
+    from orionbelt_ontology_builder_spark.model import TRIPLES_SCHEMA
+    from orionbelt_ontology_builder_spark.operators import setops as S
+
+    g = spark.createDataFrame([("s", "p", "o", "uri", None, None)], TRIPLES_SCHEMA)
+
+    def hashed(df):
+        return [
+            ln.strip() for ln in _plan(df).splitlines()
+            if "Exchange hashpartitioning" in ln
+        ]
+
+    assert len(hashed(S.diff_summary(g, g))) == 1
+    churn = hashed(S.triple_churn(g, g))  # plan text lists the root first
+    assert len(churn) == 2, churn
+    assert "hashpartitioning(subj#" in churn[1], churn
+    assert "hashpartitioning(pred#" in churn[0], churn
+
+
 def test_mention_contexts_broadcast_term_filter(spark):
     """The dictionary filter must be a broadcast join with no hash
     shuffle of the token stream (only the final sort exchanges)."""

@@ -47,6 +47,20 @@ def test_classify_resources(diff_a, diff_b):
     assert c[BASE + "Dog"] == "removed"
 
 
+def test_diff_is_set_valued_when_other_repeats_a_row(spark, diff_a):
+    """rdflib graphs are sets: a row ``other`` states twice (here the
+    NULL-slotted label literal) is one unchanged triple, not an added
+    one, and its subject is not classified."""
+    from orionbelt_ontology_builder_spark.model import TRIPLES_SCHEMA
+
+    other = diff_a.unionByName(spark.createDataFrame([DIFF_A[2]], TRIPLES_SCHEMA))
+    d = setops.diff_summary(diff_a, other).collect()[0]
+    assert (d["added"], d["removed"]) == (0, 0)
+    assert d["unchanged"] == len(DIFF_A)
+    assert setops.diff_graphs(diff_a, other)["added"].count() == 0
+    assert setops.classify_resources(diff_a, other).count() == 0
+
+
 def test_merge_union_dedup(diff_a, diff_b):
     merged = setops.merge_graphs(diff_a, diff_a, setops.MERGE)
     assert merged.count() == len(DIFF_A)
