@@ -122,7 +122,10 @@ def diff_graphs(current: DataFrame, other: DataFrame) -> dict[str, DataFrame]:
     Every frame filters the same :func:`sides` fold, so a query that
     reads several of them reuses its one exchange.
     """
-    f = sides(current, other, TRIPLE_COLS)
+    return _diff_parts(sides(current, other, TRIPLE_COLS))
+
+
+def _diff_parts(f: DataFrame) -> dict[str, DataFrame]:
     added, removed, both, is_b = _membership()
 
     def part(cond) -> DataFrame:
@@ -141,8 +144,12 @@ def diff_summary(current: DataFrame, other: DataFrame) -> DataFrame:
     """One-row diff stats (reference ``:2467-2482``): added/removed/
     unchanged counts with the bnode split — conditional counts over
     one :func:`sides` fold, so one hash exchange."""
+    return _diff_stats(sides(current, other, TRIPLE_COLS))
+
+
+def _diff_stats(f: DataFrame) -> DataFrame:
     added, removed, both, is_b = _membership()
-    return sides(current, other, TRIPLE_COLS).agg(
+    return f.agg(
         F.count(F.when(added & ~is_b, 1)).alias("added"),
         F.count(F.when(removed & ~is_b, 1)).alias("removed"),
         F.count(F.when(added & is_b, 1)).alias("added_bnode"),
@@ -156,10 +163,13 @@ def classify_resources(current: DataFrame, other: DataFrame) -> DataFrame:
     (reference ``:2494-2520``): the named-subject rows of the
     :func:`sides` fold that are on one side only, rolled up per
     subject."""
+    return _classify(sides(current, other, TRIPLE_COLS))
+
+
+def _classify(f: DataFrame) -> DataFrame:
     added, removed, _, is_b = _membership()
     per = (
-        sides(current, other, TRIPLE_COLS)
-        .filter((added | removed) & ~is_b)
+        f.filter((added | removed) & ~is_b)
         .groupBy("subj")
         .agg(
             F.max("in_b").alias("has_added"), F.max("in_a").alias("has_removed")
@@ -190,15 +200,17 @@ def preview_import(
 ) -> dict[str, DataFrame]:
     """Stage + analyze without mutating (reference ``preview_import``,
     ``:2026-2066``; purity test ``test_merge.py:131-139``).  Pure by
-    construction — nothing is written."""
+    construction — nothing is written.  The diff frames, the summary
+    and the classification all read one checkpointed :func:`sides`
+    fold."""
     from .views import get_ontology_metadata, get_statistics
 
-    d = diff_graphs(current, incoming)
+    f = sides(current, incoming, TRIPLE_COLS).localCheckpoint(eager=True)
     return {
-        **d,
+        **_diff_parts(f),
         "conflicts": detect_conflicts(current, incoming),
-        "summary": diff_summary(current, incoming),
-        "classification": classify_resources(current, incoming),
+        "summary": _diff_stats(f),
+        "classification": _classify(f),
         # reference preview also surfaces the incoming graph's counts
         # and its ontology label/uri (:2042-2057)
         "incoming_stats": get_statistics(incoming),
@@ -238,9 +250,13 @@ def diff_modified_resources(current: DataFrame, other: DataFrame) -> DataFrame:
 
     Determinism pin: the reference iterates set views (hash order);
     rows here sort by (name, kind, predicate, object)."""
+    return _modified(sides(current, other, TRIPLE_COLS))
+
+
+def _modified(f: DataFrame) -> DataFrame:
     from ..model import local_name_col
 
-    d = diff_graphs(current, other)
+    d = _diff_parts(f)
 
     def flat(df: DataFrame, kind: str) -> DataFrame:
         return df.select(
@@ -275,23 +291,12 @@ def diff_modified_resources(current: DataFrame, other: DataFrame) -> DataFrame:
     )
 
 
-def _summary_lines(
-    current: DataFrame,
-    other: DataFrame,
-    flat: DataFrame | None = None,
-    stats: DataFrame | None = None,
-) -> DataFrame:
+def _summary_lines(flat: DataFrame, stats: DataFrame) -> DataFrame:
     """(ord, line) plain-language change summaries, one per changed
     resource ordered by name, plus a trailing anonymous-node line when
-    bnode triples changed (reference ``_summarize_changes``).
-
-    ``flat``/``stats`` let report callers pass already-materialized
-    frames so the diff set-ops execute once per report, not per
-    sub-frame."""
-    if flat is None:
-        flat = diff_modified_resources(current, other)
-    if stats is None:
-        stats = diff_summary(current, other)
+    bnode triples changed (reference ``_summarize_changes``), from the
+    :func:`diff_modified_resources` rows and the :func:`diff_summary`
+    row of one fold."""
     type_map = F.create_map(
         *[F.lit(x) for kv in _TYPE_LABELS.items() for x in kv]
     )
@@ -390,13 +395,8 @@ def summarize_changes(current: DataFrame, other: DataFrame) -> DataFrame:
     """(idx, line): the reference's ``summary`` list as ordered rows."""
     from pyspark.sql import Window
 
-    lines = _summary_lines(
-        current,
-        other,
-        flat=diff_modified_resources(current, other).localCheckpoint(
-            eager=True
-        ),
-    )
+    f = sides(current, other, TRIPLE_COLS).localCheckpoint(eager=True)
+    lines = _summary_lines(_modified(f), _diff_stats(f))
     w = Window.orderBy("ord")  # tiny UI artifact: one-partition window OK
     return lines.select(
         (F.row_number().over(w) - 1).alias("idx"), "line"
@@ -414,16 +414,16 @@ def format_diff_report(
     A small UI artifact: assembled from the diff aggregates with a
     final one-partition ordering window, like ``format_delete_impact``.
     """
-    # materialize the (tiny) changed-triples frame and one-row stats
-    # once: every report sub-frame below reuses them instead of
-    # re-executing the diff set-ops per section
-    flat = diff_modified_resources(current, other).localCheckpoint(eager=True)
+    # one checkpointed fold feeds the changed-triples frame and the
+    # one-row stats that every report section below reads
+    f = sides(current, other, TRIPLE_COLS).localCheckpoint(eager=True)
+    flat = _modified(f)
     rc = flat.select("name", "change").distinct().groupBy().agg(
         F.count(F.when(F.col("change") == "added", 1)).alias("r_added"),
         F.count(F.when(F.col("change") == "removed", 1)).alias("r_removed"),
         F.count(F.when(F.col("change") == "modified", 1)).alias("r_modified"),
     )
-    stats = diff_summary(current, other).localCheckpoint(eager=True)
+    stats = _diff_stats(f)
     stats_rc = stats.crossJoin(rc)
 
     def hdr(entries: list) -> DataFrame:
@@ -530,7 +530,7 @@ def format_diff_report(
                 F.col("added"), F.col("removed"), F.col("r_modified"))),
             (0, "", 3, F.lit("")),
         ])
-        body = _summary_lines(current, other, flat=flat, stats=stats).select(
+        body = _summary_lines(flat, stats).select(
             F.struct(
                 (F.col("ord.grp") + 1).alias("grp"),
                 F.col("ord.key").alias("key"),

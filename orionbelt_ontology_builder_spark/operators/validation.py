@@ -1,13 +1,17 @@
 """Validation: OWL + SKOS rule queries (reference ``validate``
 ``ontology_manager.py:2634-2851``, ``validate_skos`` ``:1634-1717``).
 
-Each rule is one declarative query emitting
-``(severity, issue_type, subject, message)`` rows; ``validate`` is their
-union — a pure batch job.  The expensive inputs (type slices, the
-superclass closure) are computed once and shared.
+Every rule emits ``(severity, issue_type, subject, message)`` rows and
+a validator is the union of its rules — a pure batch job.  Each
+presence rule (a typed resource lacking a predicate or a use) is a row
+of ``_NODE_RULES`` over one per-node aggregation, :func:`_node_flags`:
+one ``groupBy(node)``, so one hash exchange, whatever the rule count.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +31,36 @@ from .views import duplicate_labels
 
 _DOMAIN_PREDS = [RDFS.domain, SCHEMA_NS + "domainIncludes", GIST_NS + "domainIncludes"]
 _RANGE_PREDS = [RDFS.range, SCHEMA_NS + "rangeIncludes", GIST_NS + "rangeIncludes"]
+#: a class "used" by these as subject or object is not an orphan
+#: (reference ``:2692-2758``): hierarchy, domain/range, restriction
+#: fillers, class axioms; as object also any non-W3C ``rdf:type``
+_USED_AS_SUBJ = [RDFS.subClassOf, OWL.equivalentClass, OWL.disjointWith]
+_USED_AS_OBJ = [
+    *_USED_AS_SUBJ, *_DOMAIN_PREDS, *_RANGE_PREDS,
+    OWL.onClass, OWL.someValuesFrom, OWL.allValuesFrom, OWL.complementOf,
+]
+
+#: (validator, severity, issue_type, message, condition): one presence
+#: rule per row, its condition a SQL predicate over a node's
+#: :func:`_node_flags` row (``some_scheme`` is joined on by
+#: :func:`validate_skos`: concepts are flagged not-in-scheme only when
+#: some scheme exists, reference ``:1660``)
+_NODE_RULES = (
+    ("owl", "warning", "missing_label", "class has no label",
+     "is_class AND NOT labeled AND NOT startswith(node, '_:')"),
+    ("owl", "info", "missing_domain", "property has no domain",
+     "is_prop AND NOT has_domain"),
+    ("owl", "info", "missing_range", "property has no range",
+     "is_prop AND NOT has_range"),
+    ("owl", "warning", "orphan_class", "class is not connected to anything",
+     "is_class AND NOT used AND NOT startswith(node, '_:')"),
+    ("owl", "warning", "untyped_individual", "individual has no class",
+     "is_ind AND NOT classed"),
+    ("skos", "warning", "missing_prefLabel", "concept has no prefLabel",
+     "is_concept AND NOT has_pref"),
+    ("skos", "info", "not_in_scheme", "concept not in any scheme",
+     "is_concept AND NOT in_scheme AND some_scheme"),
+)
 
 
 def _issue(df: DataFrame, severity: str, issue_type: str, message: str) -> DataFrame:
@@ -38,100 +72,74 @@ def _issue(df: DataFrame, severity: str, issue_type: str, message: str) -> DataF
     )
 
 
-def missing_labels(triples: DataFrame) -> DataFrame:
-    """Classes without rdfs:label or skos:prefLabel
-    (reference ``:2642``; negative test ``tests/test_validation.py:4``)."""
-    classes = type_slice(triples, OWL.Class).filter(~F.col("subj").startswith("_:"))
-    labeled = triples.filter(
-        F.col("pred").isin(RDFS.label, SKOS.prefLabel)
-    ).select("subj").distinct()
-    return _issue(
-        classes.join(labeled, "subj", "left_anti"),
-        "warning", "missing_label", "class has no label",
+def _node_flags(triples: DataFrame) -> DataFrame:
+    """(node, flag...): per node, whether any triple sets each flag.
+
+    Each triple becomes a subject-role row carrying every flag, plus an
+    object-role row with only ``used`` set when its predicate "uses"
+    the object (``_USED_AS_OBJ``); one ``groupBy(node)`` with a ``max``
+    per flag folds them.  Triples that set no flag are dropped before
+    the exchange."""
+    pred, obj = F.col("pred"), F.col("obj")
+    is_type = pred == RDF.type
+
+    def typed(*classes):
+        return is_type & obj.isin(*classes)
+
+    flags = {
+        "is_class": typed(OWL.Class),
+        "is_prop": typed(OWL.ObjectProperty, OWL.DatatypeProperty),
+        "is_ind": typed(OWL.NamedIndividual),
+        "classed": is_type & (obj != OWL.NamedIndividual),
+        "labeled": pred.isin(RDFS.label, SKOS.prefLabel),
+        "has_domain": pred.isin(*_DOMAIN_PREDS),
+        "has_range": pred.isin(*_RANGE_PREDS),
+        "used": pred.isin(*_USED_AS_SUBJ),
+        "is_concept": typed(SKOS.Concept),
+        "has_pref": pred == SKOS.prefLabel,
+        "in_scheme": pred == SKOS.inScheme,
+    }
+    uses_obj = pred.isin(*_USED_AS_OBJ) | (is_type & ~obj.startswith("http://www.w3.org/"))
+    as_subj = F.struct(F.col("subj").alias("node"), *[c.alias(n) for n, c in flags.items()])
+    as_obj = F.when(
+        uses_obj,
+        F.struct(obj.alias("node"), *[F.lit(n == "used").alias(n) for n in flags]),
+    )
+    return (
+        triples.filter(reduce(operator.or_, [*flags.values(), uses_obj]))
+        .select(F.explode(F.array(as_subj, as_obj)).alias("r"))
+        .filter(F.col("r").isNotNull())
+        .select("r.*")
+        .groupBy("node")
+        .agg(*[F.max(n).alias(n) for n in flags])
     )
 
 
-def missing_domain_range(triples: DataFrame) -> DataFrame:
-    """Object/data properties lacking domain or range; ``domainIncludes``
-    variants count as present (reference ``:2662-2690``, fallback test
-    ``tests/test_validation.py:34-62``)."""
-    props = type_slice(triples, OWL.ObjectProperty).unionByName(
-        type_slice(triples, OWL.DatatypeProperty)
-    ).distinct()
-    has_domain = triples.filter(F.col("pred").isin(*_DOMAIN_PREDS)).select("subj").distinct()
-    has_range = triples.filter(F.col("pred").isin(*_RANGE_PREDS)).select("subj").distinct()
-    no_dom = _issue(
-        props.join(has_domain, "subj", "left_anti"),
-        "info", "missing_domain", "property has no domain",
-    )
-    no_rng = _issue(
-        props.join(has_range, "subj", "left_anti"),
-        "info", "missing_range", "property has no range",
-    )
-    return no_dom.unionByName(no_rng)
-
-
-def orphan_classes(triples: DataFrame) -> DataFrame:
-    """Classes not in the hierarchy (either position), not a domain/range
-    (incl. *Includes variants), with no instances, not referenced by
-    restrictions or equivalent/disjoint axioms (reference ``:2692-2758``).
-
-    Union of "used" projections -> one left_anti join."""
-    classes = type_slice(triples, OWL.Class).filter(~F.col("subj").startswith("_:"))
-    used = (
-        triples.filter(F.col("pred") == RDFS.subClassOf)
-        .select("subj")
-        .unionByName(
-            triples.filter(F.col("pred") == RDFS.subClassOf).select(
-                F.col("obj").alias("subj")
-            )
+def _rule_hits(flags: DataFrame, validator: str) -> DataFrame:
+    """The issue rows of ``validator``'s ``_NODE_RULES`` over a
+    :func:`_node_flags` frame: one projection of each node to the
+    rules it fires, exploded."""
+    hit = F.array(*[
+        F.when(
+            F.expr(cond),
+            F.struct(
+                F.lit(severity).alias("severity"),
+                F.lit(issue_type).alias("issue_type"),
+                F.lit(": " + message).alias("message"),
+            ),
         )
-        .unionByName(
-            triples.filter(F.col("pred").isin(*_DOMAIN_PREDS, *_RANGE_PREDS)).select(
-                F.col("obj").alias("subj")
-            )
+        for v, severity, issue_type, message, cond in _NODE_RULES
+        if v == validator
+    ])
+    return (
+        flags.select("node", F.explode(hit).alias("hit"))
+        .filter(F.col("hit").isNotNull())
+        .select(
+            "hit.severity",
+            "hit.issue_type",
+            F.col("node").alias("subject"),
+            F.concat(local_name_col(F.col("node")), "hit.message").alias("message"),
         )
-        .unionByName(
-            triples.filter(
-                (F.col("pred") == RDF.type)
-                & ~F.col("obj").startswith("http://www.w3.org/")
-            ).select(F.col("obj").alias("subj"))
-        )
-        .unionByName(
-            triples.filter(
-                F.col("pred").isin(
-                    OWL.onClass, OWL.someValuesFrom, OWL.allValuesFrom,
-                    OWL.equivalentClass, OWL.disjointWith, OWL.complementOf,
-                )
-            ).select(F.col("obj").alias("subj"))
-        )
-        .unionByName(
-            triples.filter(
-                F.col("pred").isin(OWL.equivalentClass, OWL.disjointWith)
-            ).select("subj")
-        )
-        .distinct()
-    )
-    return _issue(
-        classes.join(used, "subj", "left_anti"),
-        "warning", "orphan_class", "class is not connected to anything",
-    )
-
-
-def untyped_individuals(triples: DataFrame) -> DataFrame:
-    """Individuals typed ONLY owl:NamedIndividual (reference ``:2760-2770``;
-    test ``tests/test_validation.py:64``)."""
-    inds = type_slice(triples, OWL.NamedIndividual)
-    typed = (
-        triples.filter(
-            (F.col("pred") == RDF.type) & (F.col("obj") != OWL.NamedIndividual)
-        )
-        .select("subj")
-        .distinct()
-    )
-    return _issue(
-        inds.join(typed, "subj", "left_anti"),
-        "warning", "untyped_individual", "individual has no class",
     )
 
 
@@ -215,13 +223,11 @@ def domain_range_mismatches(triples: DataFrame) -> DataFrame:
 
 
 def validate(triples: DataFrame) -> DataFrame:
-    """Full OWL validation — union of the rule queries
-    (reference ``validate``, ``:2634-2851``)."""
+    """Full OWL validation (reference ``validate``, ``:2634-2851``): the
+    ``owl`` rows of ``_NODE_RULES`` over one :func:`_node_flags` fold,
+    plus duplicate labels and domain/range mismatches."""
     out = (
-        missing_labels(triples)
-        .unionByName(missing_domain_range(triples))
-        .unionByName(orphan_classes(triples))
-        .unionByName(untyped_individuals(triples))
+        _rule_hits(_node_flags(triples), "owl")
         .unionByName(duplicate_label_issues(triples))
         .unionByName(domain_range_mismatches(triples))
     )
@@ -234,24 +240,16 @@ def validate(triples: DataFrame) -> DataFrame:
 
 
 def validate_skos(triples: DataFrame) -> DataFrame:
-    concepts = type_slice(triples, SKOS.Concept)
-    schemes = type_slice(triples, SKOS.ConceptScheme)
-
-    has_pref = triples.filter(F.col("pred") == SKOS.prefLabel).select("subj").distinct()
-    missing_pref = _issue(
-        concepts.join(has_pref, "subj", "left_anti"),
-        "warning", "missing_prefLabel", "concept has no prefLabel",
+    """SKOS validation: the ``skos`` rows of ``_NODE_RULES`` over one
+    :func:`_node_flags` fold, plus duplicate prefLabels per scheme and
+    broader cycles."""
+    # one ConceptScheme typing, if any, gates not_in_scheme (reference :1660)
+    some_scheme = (
+        triples.filter((F.col("pred") == RDF.type) & (F.col("obj") == SKOS.ConceptScheme))
+        .select(F.lit(True).alias("some_scheme"))
+        .limit(1)
     )
-
-    # concept-not-in-scheme flagged only if schemes exist (reference :1660)
-    in_scheme = triples.filter(F.col("pred") == SKOS.inScheme).select("subj").distinct()
-    n_schemes = schemes.limit(1)
-    not_in_scheme = _issue(
-        concepts.join(in_scheme, "subj", "left_anti").join(
-            n_schemes.select(F.lit(1).alias("one")), F.lit(True), "left_semi"
-        ),
-        "info", "not_in_scheme", "concept not in any scheme",
-    )
+    presence = _rule_hits(_node_flags(triples).join(some_scheme, F.lit(True), "left"), "skos")
 
     # duplicate prefLabel per scheme (reference :1668-1683)
     pref = triples.filter(F.col("pred") == SKOS.prefLabel).select(
@@ -289,8 +287,7 @@ def validate_skos(triples: DataFrame) -> DataFrame:
     )
 
     return (
-        missing_pref.unionByName(not_in_scheme)
-        .unionByName(dup_pref)
+        presence.unionByName(dup_pref)
         .unionByName(cycles)
         .orderBy("severity", "issue_type", "subject")
     )

@@ -609,6 +609,26 @@ def test_membership_fold_hash_exchanges(spark):
     assert "hashpartitioning(pred#" in churn[0], churn
 
 
+def test_node_flag_fold_hash_exchanges(spark):
+    """``validation._node_flags`` is one hash exchange (the per-node
+    ``groupBy`` with its map-side partial aggregate), whatever the
+    number of presence rules; ``validate`` on ``validation_om`` plans
+    19."""
+    from orionbelt_ontology_builder_spark.fixtures import fixture_triples
+    from orionbelt_ontology_builder_spark.operators import validation as V
+
+    g = fixture_triples(spark, "validation_om")
+
+    def hashed(df):
+        return [
+            ln for ln in _plan(df).splitlines()
+            if "Exchange hashpartitioning" in ln
+        ]
+
+    assert len(hashed(V._node_flags(g))) == 1
+    assert len(hashed(V.validate(g))) == 19
+
+
 def test_mention_contexts_broadcast_term_filter(spark):
     """The dictionary filter must be a broadcast join with no hash
     shuffle of the token stream (only the final sort exchanges)."""

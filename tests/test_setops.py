@@ -203,6 +203,33 @@ def test_preview_import_surfaces_incoming_stats_and_meta(diff_a, diff_b):
     assert "uri" in meta_cols or "ontology_uri" in meta_cols
 
 
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda a, b: setops.preview_import(a, b),
+        lambda a, b: setops.format_diff_report(a, b, "markdown"),
+        lambda a, b: setops.format_diff_report(a, b, "text"),
+        lambda a, b: setops.summarize_changes(a, b),
+    ],
+    ids=["preview_import", "report_markdown", "report_text", "summarize_changes"],
+)
+def test_composite_reports_fold_once(monkeypatch, diff_a, diff_b, build):
+    """Each composite report builds one ``sides`` fold of the two
+    graphs and every part reads it."""
+    calls = []
+    fold = setops.sides
+
+    def counted(*args, **kwargs):
+        calls.append(args[2])
+        return fold(*args, **kwargs)
+
+    monkeypatch.setattr(setops, "sides", counted)
+    out = build(diff_a, diff_b)
+    for df in out.values() if isinstance(out, dict) else [out]:
+        df.collect()
+    assert len(calls) == 1, calls
+
+
 def test_latest_wins_freshest_then_source_tiebreak(spark):
     import datetime as dt
     from orionbelt_ontology_builder_spark.operators import setops as S

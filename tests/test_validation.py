@@ -94,6 +94,56 @@ def test_skos_negative(spark, skos_om):
     assert ("broader_cycle", BASE + "Y") in got
 
 
+#: the edges of the presence rules, each a case no fixture covers: an
+#: unlabelled bnode class, a class named only as a someValuesFrom
+#: filler, a class used only as an individual's type, a typed
+#: NamedIndividual, a range-only property and a concept outside any
+#: scheme (with no ConceptScheme declared)
+_BOUNDARY = [
+    t_uri("_:r", RDF.type, OWL.Class),
+    t_uri("_:r", OWL.someValuesFrom, BASE + "Filler"),
+    t_uri(BASE + "Filler", RDF.type, OWL.Class),
+    t_lit(BASE + "Filler", RDFS.label, "Filler"),
+    t_uri(BASE + "Kind", RDF.type, OWL.Class),
+    t_lit(BASE + "Kind", RDFS.label, "Kind"),
+    t_uri(BASE + "ind", RDF.type, OWL.NamedIndividual),
+    t_uri(BASE + "ind", RDF.type, BASE + "Kind"),
+    t_uri(BASE + "ghost", RDF.type, OWL.NamedIndividual),
+    t_uri(BASE + "rangeOnly", RDF.type, OWL.ObjectProperty),
+    t_uri(BASE + "rangeOnly", SCHEMA_NS + "rangeIncludes", BASE + "Target"),
+    t_uri(BASE + "Target", RDF.type, OWL.Class),
+    t_lit(BASE + "Target", RDFS.label, "Target"),
+    t_uri(BASE + "Lonely", RDF.type, OWL.Class),
+    t_uri(BASE + "c", RDF.type, SKOS.Concept),
+    t_lit(BASE + "c", SKOS.prefLabel, "c"),
+    t_uri(BASE + "d", RDF.type, SKOS.Concept),
+    t_lit(BASE + "d", SKOS.prefLabel, "d"),
+    t_uri(BASE + "d", SKOS.inScheme, BASE + "S"),
+]
+
+
+def test_presence_rule_boundaries(spark):
+    g = spark.createDataFrame(_BOUNDARY, TRIPLES_SCHEMA)
+
+    def got(df):
+        return {(r["issue_type"], r["subject"]) for r in df.collect()}
+
+    assert got(validation.validate(g)) == {
+        ("missing_label", BASE + "Lonely"),
+        ("orphan_class", BASE + "Lonely"),
+        ("untyped_individual", BASE + "ghost"),
+        ("missing_domain", BASE + "rangeOnly"),
+    }
+    # d names a scheme, but no ConceptScheme is declared: no gate
+    assert got(validation.validate_skos(g)) == set()
+    scheme = spark.createDataFrame(
+        [t_uri(BASE + "S", RDF.type, SKOS.ConceptScheme)], TRIPLES_SCHEMA
+    )
+    assert got(validation.validate_skos(g.unionByName(scheme))) == {
+        ("not_in_scheme", BASE + "c"),
+    }
+
+
 def test_shacl_min_max_targets_subclasses(spark):
     """A Person shape targets alice (typed Employee only): hasName
     minCount 1 fires with n=0; rdf:type maxCount 1 fires with n=2;
