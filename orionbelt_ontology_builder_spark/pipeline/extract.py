@@ -69,6 +69,9 @@ def extract_raw_triples(pages: DataFrame) -> DataFrame:
                     rows["obj_surface"].append(o)
                     rows["source_url"].append(url)
                     rows["warc_ts"].append(ts)
-            yield pd.DataFrame(rows)
+            # an empty frame's columns are float64, which Arrow cannot
+            # cast to the timestamp column: skip batches with no triple
+            if rows["source_url"]:
+                yield pd.DataFrame(rows)
 
     return src.mapInPandas(gen, RAW_TRIPLES_SCHEMA)

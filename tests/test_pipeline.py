@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,10 +144,7 @@ def test_checkpoint_resume(spark, pages_df, tmp_path):
     assert all(e["n_triples"] > 0 for e in entries)
     raw = spark.read.parquet(os.path.join(out, "raw_triples"))
     assert sum(e["n_triples"] for e in entries) == raw.count()
-    assert (
-        sum(e["n_urls"] for e in entries)
-        == raw.select("source_url").distinct().count()
-    )
+    assert sum(e["n_pages"] for e in entries) == pages_df.count()
     n_before = os.path.getsize(manifest)
     # resume: nothing re-runs, manifest unchanged
     R.run_pipeline(spark, pages_df, out, n_slices=4)
@@ -166,6 +164,126 @@ def test_checkpoint_resume(spark, pages_df, tmp_path):
     hier = spark.read.parquet(os.path.join(out, "class_hierarchy"))
     assert rows(hier, ["child", "parent"]) == rows(
         kg["class_hierarchy"], ["child", "parent"]
+    )
+
+
+def test_manifest_counts_pages_without_triples(spark, pages_df, tmp_path):
+    """``n_pages`` counts every page a slice consumed, a page that yields
+    no triple included; ``n_triples`` counts the rows written."""
+    from orionbelt_ontology_builder_spark.pipeline.materialize import (
+        run_extraction_with_checkpoints,
+    )
+
+    empty_html = "<html><body><p>nothing to extract here</p></body></html>"
+    assert extract_triples_from_text(html_to_text(empty_html)) == []
+    some = pages_df.filter(F.col("url").isin([P.page_url(i) for i in range(5)]))
+    empty = some.limit(1).select(
+        F.lit("https://site0.example/empty").alias("url"),
+        "warc_ts",
+        F.encode(F.lit(empty_html), "utf-8").alias("html"),
+        F.lit("nothing to extract here").alias("text"),
+        "lang",
+    )
+    out = str(tmp_path / "kg_out")
+    raw = run_extraction_with_checkpoints(
+        spark, some.unionByName(empty), out, n_slices=2
+    )
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        entries = [json.loads(l) for l in fh]
+    assert sorted(e["slice"] for e in entries) == ["slice_0", "slice_1"]
+    assert sum(e["n_pages"] for e in entries) == 6
+    assert sum(e["n_triples"] for e in entries) == raw.count()
+    assert raw.select("source_url").distinct().count() == 5
+
+
+def _last_job_id(sc, group: str) -> int:
+    """Run one tiny job under ``group`` and return its id, once the
+    status store has it (the store is fed asynchronously, in event
+    order, so every earlier job is in it too)."""
+    sc.setJobGroup(group, group)
+    sc.parallelize([0], 1).count()
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, "status store never saw the job"
+        time.sleep(0.05)
+    return max(ids)
+
+
+def test_extraction_one_job_per_slice_in_caller_group(spark, pages_df, tmp_path):
+    """Each pending slice is one write job; the slices' pool threads keep
+    the caller's job group; a call with nothing pending runs at most the
+    final read's job."""
+    from orionbelt_ontology_builder_spark.pipeline.materialize import (
+        run_extraction_with_checkpoints,
+    )
+
+    sc, out = spark.sparkContext, str(tmp_path / "kg_out")
+
+    def jobs_of(call, tag):
+        first = _last_job_id(sc, f"{tag}-before")
+        sc.setJobGroup(tag, tag)
+        try:
+            call()
+        finally:
+            last = _last_job_id(sc, f"{tag}-after")
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return last - first - 1, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    run = lambda: run_extraction_with_checkpoints(spark, pages_df, out, n_slices=4)
+    n_jobs, in_group = jobs_of(run, f"slices-{id(out):x}")
+    assert 4 <= n_jobs <= 5
+    assert in_group == n_jobs
+    n_jobs, in_group = jobs_of(run, f"resume-{id(out):x}")
+    assert n_jobs <= 1
+    assert in_group == n_jobs
+
+
+def test_failed_slice_leaves_others_marked_and_rerun_completes(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    """One slice raising inside its write job: the pool finishes and marks
+    the other slices, the call raises, and a rerun without the fault
+    writes the tables a clean build gives."""
+    from orionbelt_ontology_builder_spark.pipeline import extract as X
+
+    bad, n_slices = 1, 4
+    extract = X.extract_raw_triples
+
+    def faulty(pages):
+        hit = F.pmod(F.xxhash64("source_url"), F.lit(n_slices)) == bad
+        return extract(pages).filter(
+            F.when(hit, F.raise_error(F.lit("injected slice fault"))).otherwise(
+                F.lit(True)
+            )
+        )
+
+    out = str(tmp_path / "kg_out")
+    monkeypatch.setattr(X, "extract_raw_triples", faulty)
+    with pytest.raises(Exception, match="injected slice fault"):
+        R.run_pipeline(spark, pages_df, out, n_slices=n_slices)
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        marked = sorted(json.loads(l)["slice"] for l in fh)
+    assert marked == [f"slice_{i}" for i in range(n_slices) if i != bad]
+
+    monkeypatch.setattr(X, "extract_raw_triples", extract)
+    R.run_pipeline(spark, pages_df, out, n_slices=n_slices)
+    with open(os.path.join(out, "_manifest.jsonl")) as fh:
+        marked = sorted(json.loads(l)["slice"] for l in fh)
+    assert marked == [f"slice_{i}" for i in range(n_slices)]
+    kg = R.build_kg(pages_df)
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    raw_cols = ["subj_surface", "pred", "obj_surface", "source_url", "warc_ts"]
+    edge_cols = ["subj", "pred", "obj", "source_url", "warc_ts"]
+    read = lambda name: spark.read.parquet(os.path.join(out, name))
+    assert rows(read("raw_triples").select(*raw_cols)) == rows(
+        kg["raw_triples"].select(*raw_cols)
+    )
+    assert rows(read("edges").select(*edge_cols)) == rows(
+        kg["edges"].select(*edge_cols)
+    )
+    assert rows(read("class_hierarchy").select("child", "parent")) == rows(
+        kg["class_hierarchy"].select("child", "parent")
     )
 
 
